@@ -1,4 +1,5 @@
-"""register_views idempotence memo (r12 optimization).
+"""register_views idempotence memo (r12 optimization), and the footer
+row-count memo behind ``parallel_table``.
 
 The memo must (a) skip re-registration when nothing changed — the whole
 point, q1_sql paid ~0.7 s of footer re-reads per construction — while
@@ -61,3 +62,25 @@ def test_sf_dir_switch_always_reregisters(spark, sf_dir, monkeypatch, tmp_path):
     io.register_views(spark, str(d))
     io.register_views(spark, sf_dir)   # switch BACK must also re-register
     assert calls["n"] == 3 * len(io.TABLES)
+
+
+def test_footer_rows_not_served_stale_when_dir_grows(tmp_path, monkeypatch):
+    """A directory that grows from one part file to several, its first
+    file untouched, must stop reporting the first footer's count: that
+    count is now only a lower bound of the table's rows. A multi-file
+    directory is answered without opening any footer."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    d = tmp_path / "t.parquet"
+    d.mkdir()
+    pq.write_table(pa.table({"x": list(range(5))}), d / "part-00000.parquet")
+    assert io.table_rows_from_footer(str(d)) == 5
+    pq.write_table(pa.table({"x": list(range(7))}), d / "part-00001.parquet")
+    opened = []
+    real = pq.ParquetFile
+    monkeypatch.setattr(
+        pq, "ParquetFile", lambda f, *a, **k: opened.append(f) or real(f, *a, **k)
+    )
+    assert io.table_rows_from_footer(str(d)) is None
+    assert opened == []

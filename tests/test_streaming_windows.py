@@ -239,3 +239,38 @@ def test_watermark_evicts_state_across_micro_batches(spark, tmp_path):
     assert emitted == expect, (
         "append-mode emissions diverge from the finalizable batch windows"
     )
+
+
+def test_repeat_windows_match_oracle_in_non_utc_session(
+    spark, sf_dir, monkeypatch
+):
+    """The stream's sub-session must be UTC on EVERY query, not only on
+    the first one (the one that fills the stream-schema memo): a driver
+    session outside UTC hands out sub-sessions in its own zone, and the
+    stream's NTZ event times would then shift the window boundaries."""
+    import pandas as pd
+    from pyspark.sql import SparkSession
+
+    from tests.test_oracle_parity import canon, duck
+    from tmdb_sync_spark.registry import ORACLES
+    from tmdb_sync_spark.streaming import windows
+
+    zone = "America/New_York"
+    real_new_session = SparkSession.newSession
+
+    def non_utc_session(self):
+        sub = real_new_session(self)
+        sub.conf.set("spark.sql.session.timeZone", zone)
+        return sub
+
+    monkeypatch.setattr(SparkSession, "newSession", non_utc_session)
+    monkeypatch.setattr(windows, "_STREAM_SCHEMA_CACHE", {})
+    before = spark.conf.get("spark.sql.session.timeZone")
+    oracle = canon(duck(sf_dir).execute(ORACLES["st_tumbling_window"]).df())
+    try:
+        for _ in range(2):
+            spark.conf.set("spark.sql.session.timeZone", zone)
+            got = windows.st_tumbling_window(spark, sf_dir).toPandas()
+            pd.testing.assert_frame_equal(canon(got), oracle)
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", before)

@@ -140,28 +140,29 @@ def broadcast_if_dim(
     return df
 
 
-# (path, mtime_ns, size) -> footer row count (O(1) metadata read)
+# (file, part_count, mtime_ns, size) -> footer row count (O(1) metadata read)
 _TABLE_ROWS: dict[tuple, int | None] = {}
 
 
 def table_rows_from_footer(path: str) -> int | None:
     """Row count from parquet footer metadata (no data read), cached per
-    content stamp; ``None`` when unreadable — callers fall back to the
-    session default."""
-    f = path
+    content stamp; ``None`` when unreadable or when a directory holds
+    several part files (the first footer would only be a lower bound,
+    and reading every footer is O(file count) — same rationale as
+    winnow's capped footer walk) — callers fall back to the session
+    default."""
+    f, n_parts = path, 1
     if os.path.isdir(path):
         parts = sorted(
             e.path for e in os.scandir(path) if e.name.endswith(".parquet")
         )
-        if not parts:
+        n_parts = len(parts)
+        if n_parts != 1:
             return None
         f = parts[0]
-        many = len(parts) > 1
-    else:
-        many = False
     try:
         st = os.stat(f)
-        key = (f, st.st_mtime_ns, st.st_size)
+        key = (f, n_parts, st.st_mtime_ns, st.st_size)
     except OSError:
         return None
     if key not in _TABLE_ROWS:
@@ -169,12 +170,6 @@ def table_rows_from_footer(path: str) -> int | None:
             import pyarrow.parquet as pq
 
             n = pq.ParquetFile(f).metadata.num_rows
-            if many:
-                # multi-file dir: first footer is a LOWER bound; good
-                # enough for a partition-count floor, and one footer
-                # read keeps this O(1) in file count (same rationale as
-                # winnow's capped footer walk)
-                n = None
         except Exception:
             n = None
         _TABLE_ROWS[key] = n

@@ -54,8 +54,9 @@ import os
 import shutil
 
 from pyspark.errors import AnalysisException
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, DataFrameReader, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from tmdb_sync_spark.plans import manifest as km
 from tmdb_sync_spark.plans.manifest import HIVE_NULL_PART
@@ -294,12 +295,12 @@ def break_merge_lock(target_dir: str) -> bool:
 SWAP_JOURNAL_NAME = "_swap.journal"
 
 # Table schema persisted beside the data (underscore-prefixed → invisible
-# to Spark's file listing). Spark cannot infer a schema from a partitioned
-# table with ZERO partitions (an empty overwrite writes no files at all;
-# a merge can legitimately empty every partition), so the writers persist
-# the read-back schema here and :func:`read_partitioned` degrades an
-# empty table to an empty frame of it — the same role a table format's
-# log plays in keeping empty tables readable.
+# to Spark's file listing). Every commit writes the read-back schema
+# here, and the readers hand it to Spark instead of inferring one: that
+# skips a schema-inference job per read, and keeps an EMPTY table (an
+# empty overwrite writes no files at all; a merge can legitimately empty
+# every partition) readable as an empty frame — the same role a table
+# format's log plays.
 SCHEMA_NAME = "_table_schema.json"
 
 
@@ -310,10 +311,8 @@ def _staging_dir(target_dir: str) -> str:
 def _schema_record(schema, partition_col: str) -> dict:
     """Serialize a writer frame's schema in READ-BACK column order:
     Spark appends partition columns after the data columns when reading
-    a partitioned layout, so the persisted empty-table schema must too —
-    consumers then see identical column order either way."""
-    from pyspark.sql.types import StructType
-
+    a partitioned layout, so the persisted schema must too — readers
+    that pass it to Spark then see the inferred column order."""
     fields = [f for f in schema.fields if f.name != partition_col] + [
         f for f in schema.fields if f.name == partition_col
     ]
@@ -356,30 +355,35 @@ def table_exists(path: str) -> bool:
     )
 
 
+def _stored_schema(path: str) -> StructType | None:
+    """The table's read-back schema from its ``_table_schema.json``
+    record, or ``None`` when no record exists (a table from a writer
+    that predates the record, or no table at all)."""
+    try:
+        with open(os.path.join(path, SCHEMA_NAME)) as fh:
+            return StructType.fromJson(json.load(fh)["schema"])
+    except (FileNotFoundError, NotADirectoryError):
+        return None
+
+
+def _reader(spark: SparkSession, path: str) -> DataFrameReader:
+    # the stored schema spares Spark its schema-inference job; without
+    # a record the read falls back to inference
+    schema = _stored_schema(path)
+    return spark.read if schema is None else spark.read.schema(schema)
+
+
 def read_partitioned(spark: SparkSession, path: str) -> DataFrame:
     """Read a table maintained by :func:`write_partitioned` /
-    :func:`merge_into_partitioned`, degrading an EMPTY table (zero
-    partition dirs — schema inference impossible) to an empty frame of
-    the schema persisted at write time. A table that fails to read while
-    partition dirs exist is genuinely broken and re-raises."""
-    try:
-        return spark.read.parquet(path)
-    except AnalysisException:
-        sp = os.path.join(path, SCHEMA_NAME)
-        if os.path.exists(sp):
-            with open(sp) as fh:
-                rec = json.load(fh)
-            pcol = rec["partition_col"]
-            has_parts = os.path.isdir(path) and any(
-                km._is_part_dir(e, pcol) for e in os.listdir(path)
-            )
-            if not has_parts:
-                from pyspark.sql.types import StructType
+    :func:`merge_into_partitioned`.
 
-                return spark.createDataFrame(
-                    [], StructType.fromJson(rec["schema"])
-                )
-        raise
+    The schema comes from the table's ``_table_schema.json`` record, so
+    building the frame runs no schema-inference job (and, with the
+    session's driver-side listing, no Spark job at all). An EMPTY table
+    (zero partition dirs) reads as an empty frame of the record's
+    columns. Only a table without a record falls back to inference,
+    which fails on an empty table."""
+    return _reader(spark, path).parquet(path)
 
 
 def read_partitioned_for_key(
@@ -394,12 +398,15 @@ def read_partitioned_for_key(
     regardless of table size — the serving-path behavior a 100 TB CDC
     table needs, without an index.
 
+    Like :func:`read_partitioned`, the schema comes from the table's
+    ``_table_schema.json`` record, so no schema-inference job runs.
     Degrades to :func:`read_partitioned` (full listing) when the
-    manifest is absent or kept for a DIFFERENT key; unknown or
-    type-incomparable ranges are conservatively read. Zero candidates
-    returns an empty frame of the persisted schema. The usual retention
-    caveat applies: rows outside pruned partitions are invisible by
-    construction, so callers must pass the table's manifest key."""
+    manifest or the record is absent, or the manifest is kept for a
+    DIFFERENT key; unknown or type-incomparable ranges are
+    conservatively read. Zero candidates returns an empty frame of the
+    persisted schema. The usual retention caveat applies: rows outside
+    pruned partitions are invisible by construction, so callers must
+    pass the table's manifest key."""
     sp = os.path.join(path, SCHEMA_NAME)
     mp = os.path.join(path, km.MANIFEST_NAME)
     try:
@@ -410,6 +417,7 @@ def read_partitioned_for_key(
         if not (isinstance(doc, dict) and doc.get("key") == key):
             return read_partitioned(spark, path)
         pcol = rec["partition_col"]
+        schema = StructType.fromJson(rec["schema"])
     except (OSError, ValueError, KeyError, TypeError):
         return read_partitioned(spark, path)
     manifest = km.load(path, key, pcol)
@@ -424,10 +432,8 @@ def read_partitioned_for_key(
         except TypeError:
             cand.append(p)
     if not cand:
-        from pyspark.sql.types import StructType
-
-        return spark.createDataFrame([], StructType.fromJson(rec["schema"]))
-    return spark.read.option("basePath", path).parquet(
+        return spark.createDataFrame([], schema)
+    return spark.read.schema(schema).option("basePath", path).parquet(
         *[os.path.join(path, p) for p in sorted(cand)]
     )
 
@@ -743,7 +749,7 @@ def _merge_locked(
             # stats — staged partitions are written key-clustered below
             # precisely so this scan skips most row groups.
             others = (
-                spark.read.option("basePath", target_dir)
+                _reader(spark, target_dir).option("basePath", target_dir)
                 .parquet(*[os.path.join(target_dir, p) for p in probe_parts])
                 .where(F.col(keys[0]).between(F.lit(kmin), F.lit(kmax)))
                 .select(*keys, partition_col)
@@ -791,18 +797,10 @@ def _merge_locked(
         # naming a column the target "doesn't have", and every retry
         # takes this same path (found by review — the ingest bootstrap +
         # all-dead-lettered first page scenario). The schema record is
-        # exactly the read-back schema read_partitioned degrades to.
-        sp = os.path.join(target_dir, SCHEMA_NAME)
-        if os.path.exists(sp):
-            from pyspark.sql.types import StructType
-
-            with open(sp) as fh:
-                rec = json.load(fh)
-            target = spark.createDataFrame(
-                [], StructType.fromJson(rec["schema"])
-            )
-        else:
-            target = spark.createDataFrame([], source.schema)
+        # exactly the read-back schema read_partitioned reads with.
+        target = spark.createDataFrame(
+            [], _stored_schema(target_dir) or source.schema
+        )
     target = target.where(_touched_cond(touched, partition_col))
     # Self-healing replay: a crash between two partition swaps of a
     # key-move batch can leave a key duplicated across partition dirs
@@ -971,8 +969,8 @@ def _merge_locked(
         _swap_partition(target_dir, staging, n)
     if maintain:
         km.save(target_dir, keys[0], partition_col, post)
-    # keep the empty-table degrade current: a merge can empty every
-    # partition, and read_partitioned then needs this schema
+    # keep the readers' schema current: read_partitioned reads with it,
+    # including after a merge emptied every partition
     _save_schema_record(target_dir, schema_rec)
     os.unlink(os.path.join(target_dir, SWAP_JOURNAL_NAME))
     shutil.rmtree(staging, ignore_errors=True)

@@ -7,6 +7,14 @@ Pins the session configuration the whole engine assumes:
 - AQE on (runtime shuffle-partition coalescing, skew-join handling) — the
   scale posture for 100 TB runs.
 - Arrow on for any pandas interchange (multimodal stubs, ``toPandas``).
+- File listing on the driver. When a read names more paths than
+  ``spark.sql.sources.parallelPartitionDiscovery.threshold`` (Spark's
+  default is 32), Spark lists them in a separate job. The master here is
+  always ``local[N]``, so that job runs on this JVM's own task threads:
+  it adds a job's scheduling cost and no I/O parallelism. On a 4-vCPU
+  host the listing job over the 105-partition movies table took several
+  hundred ms of every catalog read; the driver lists the same
+  directories in about 60 ms.
 """
 
 from __future__ import annotations
@@ -14,6 +22,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+LISTING_THRESHOLD_CONF = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+LISTING_THRESHOLD = str(1 << 30)
 
 
 def get_spark(app_name: str = "tmdb-sync-spark", *, cpus: str | None = None,
@@ -32,6 +43,8 @@ def get_spark(app_name: str = "tmdb-sync-spark", *, cpus: str | None = None,
         .config("spark.sql.shuffle.partitions", shuffle_partitions)
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.aggregatePushdown", "true")
+        # master is always local[N]: a listing job gains no parallelism
+        .config(LISTING_THRESHOLD_CONF, LISTING_THRESHOLD)
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )
@@ -51,6 +64,7 @@ def get_spark(app_name: str = "tmdb-sync-spark", *, cpus: str | None = None,
         ("spark.sql.shuffle.partitions", shuffle_partitions),
         ("spark.sql.execution.arrow.pyspark.enabled", "true"),
         ("spark.sql.parquet.aggregatePushdown", "true"),
+        (LISTING_THRESHOLD_CONF, LISTING_THRESHOLD),
     ):
         if spark.conf.get(k, None) != v:
             spark.conf.set(k, v)

@@ -93,6 +93,10 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS", "8"),
     )
     sub.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
+    # pin the sub-session too: newSession() seeds its SQLConf from the
+    # SparkContext conf, not the caller's runtime conf, and the stream
+    # casts NTZ event times in the session zone
+    sub.conf.set("spark.sql.session.timeZone", "UTC")
     # State-store provider knob. Default = Spark's in-heap HDFS-backed
     # store: fastest at the bench's state sizes (≤ ~200k rows). At the
     # 64× events ramp (~13M pre-agg state rows) the in-heap store hits
