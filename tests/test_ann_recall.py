@@ -19,7 +19,7 @@ deterministically, reproducibly bad at retrieving. These tests pin:
   radius-0's, so recall must not decrease.
 
 The full n_probe × bits × radius sweep is recorded in COVERAGE.md
-(scripts/exp_ann_recall.py).
+(scripts/exp_ann_recall.py at cb774a3).
 """
 
 from __future__ import annotations

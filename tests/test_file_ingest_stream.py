@@ -377,8 +377,8 @@ def test_second_feed_sharing_profile_path_is_not_swallowed(
 
 def test_full_chain_ingest_to_verified_shards(spark, tmp_path):
     """The complete operational composition as a CI pin (the 1x/16x/64x
-    timing lives in scripts/exp_chain_ramp.py): jsonl drops -> ingest
-    (dead-letter + index dedup + MERGE + per-file profile drop) ->
+    timing lives in scripts/exp_chain_ramp.py at cb774a3): jsonl drops ->
+    ingest (dead-letter + index dedup + MERGE + per-file profile drop) ->
     quality_gate -> incremental profile report -> split + leakage audit
     -> compact the profile -> export -> manifest-verified read-back.
     Every stage's invariant holds on the composed artifact."""
@@ -521,8 +521,8 @@ def test_batch_granularity_sweep_and_bound(spark, tmp_path):
     """Drop-granularity contracts (r8 verdict #6): an availableNow pass
     folds EVERY pending drop into ONE micro-batch — the natural
     amortization of the measured ~9 s per-batch constant
-    (scripts/exp_ingest_drops.py) — while max_files_per_batch bounds a
-    batch to N files for backlog-memory control, with identical final
+    (scripts/exp_ingest_drops.py at cb774a3) — while max_files_per_batch
+    bounds a batch to N files for backlog-memory control, with identical final
     state either way."""
     import pytest
 

@@ -124,3 +124,51 @@ def test_exact_cover_property(spark):
         assert got == _naive_pairs(rows)
 
     run()
+
+
+def test_embeddings_spread_per_consumer_class(spark, tmp_path, monkeypatch):
+    """The two embedding consumer classes spread their input differently.
+    The per-row scorers (``_quantized``, the sign-LSH top-k's
+    ``_bucketed``) key the spread on row count, so ~2,000 vectors run as
+    ONE task. The pair-dedup family (``dd_embedding_cosine``,
+    ``dd_cluster_components``) scores bucket PAIRS, so its input keeps
+    the session's full spread — keyed on rows, the whole pair space ran
+    on one core."""
+    import random
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from tmdb_sync_spark.functions import similarity as sim
+
+    par = spark.sparkContext.defaultParallelism
+    if par < 2:
+        pytest.skip("needs a session with more than one core")
+    rng = random.Random(7)
+    n = 2000
+    pq.write_table(
+        pa.table({
+            "vec_id": pa.array(range(n), pa.int64()),
+            "embedding": pa.array(
+                [[rng.uniform(-1, 1) for _ in range(sim.DIM)]
+                 for _ in range(n)],
+                pa.list_(pa.float32()),
+            ),
+            "label": pa.array([i % 7 for i in range(n)], pa.int32()),
+        }),
+        tmp_path / "embeddings.parquet",
+    )
+    d = str(tmp_path)
+    spreads: list[int] = []
+    real = sim.parallel_table
+
+    def recording(*a, **k):
+        df = real(*a, **k)
+        spreads.append(df.rdd.getNumPartitions())
+        return df
+
+    monkeypatch.setattr(sim, "parallel_table", recording)
+    sim._dup_candidate_pairs(spark, d)
+    assert spreads == [par]
+    assert sim._quantized(spark, d).rdd.getNumPartitions() == 1
+    assert sim._bucketed(spark, d, sim.N_SIGN_BITS).rdd.getNumPartitions() == 1

@@ -1026,3 +1026,153 @@ def test_point_read_prunes_by_manifest(spark):
     # wrong key name → safe degrade to the full table
     full = read_partitioned_for_key(spark, target, "other_key", 205)
     assert full.count() == read_partitioned(spark, target).count()
+
+
+class _CrashAfterJournal(Exception):
+    pass
+
+
+def _crash_after_journal(monkeypatch):
+    """Make the next commit die right after its journal rename — the
+    commit point — before anything is applied."""
+    import tmdb_sync_spark.plans.partitioned as pp
+
+    real = pp._write_swap_journal
+
+    def crashing(*a, **k):
+        real(*a, **k)
+        monkeypatch.setattr(pp, "_write_swap_journal", real)
+        raise _CrashAfterJournal
+
+    monkeypatch.setattr(pp, "_write_swap_journal", crashing)
+
+
+def _keyed_base(spark, target):
+    base = spark.createDataFrame(
+        [(1, 2000, 1.0), (3, 2000, 3.0), (10, 2001, 10.0), (12, 2001, 12.0)],
+        "k BIGINT, y INT, price DOUBLE",
+    )
+    write_partitioned(base, target, "y", manifest_key="k")
+
+
+_COMMIT_KINDS = ["merge", "overwrite", "overwrite_unkeyed"]
+
+
+def _run_commit(spark, target, kind):
+    if kind == "merge":
+        # widens y=2000, moves k=10 out of y=2001 into a new y=2002
+        src = spark.createDataFrame(
+            [(50, 2000, 5.0), (10, 2002, 11.0)],
+            "k BIGINT, y INT, price DOUBLE",
+        )
+        merge_into_partitioned(spark, target, src, ["k"], "y")
+    else:
+        new = spark.createDataFrame(
+            [(40, 2000, 4.0), (2, 2003, 2.0)],
+            "k BIGINT, y INT, price DOUBLE",
+        )
+        write_partitioned(
+            new, target, "y",
+            manifest_key="k" if kind == "overwrite" else None,
+        )
+
+
+def _side_files(target):
+    import json as _json
+
+    from tmdb_sync_spark.plans import manifest as km
+    from tmdb_sync_spark.plans.partitioned import SCHEMA_NAME
+
+    mp = os.path.join(target, km.MANIFEST_NAME)
+    parts = None
+    if os.path.exists(mp):
+        with open(mp) as fh:
+            parts = _json.load(fh)["parts"]
+    with open(os.path.join(target, SCHEMA_NAME)) as fh:
+        return parts, _json.load(fh)
+
+
+@pytest.mark.parametrize("kind", _COMMIT_KINDS)
+def test_crash_after_journal_recovers_same_side_files_as_clean_run(
+    spark, monkeypatch, kind
+):
+    """A writer that dies right after its journal rename and is then
+    rolled forward by recovery leaves the same key manifest parts and
+    schema record as a clean run of the same write — the normal path
+    and recovery apply one plan with one code path."""
+    from tmdb_sync_spark.plans.partitioned import (
+        SWAP_JOURNAL_NAME,
+        _recover_leftovers,
+    )
+
+    d = tempfile.mkdtemp(prefix="pm_jside_")
+    clean, crashed = f"{d}/clean", f"{d}/crashed"
+    for t in (clean, crashed):
+        _keyed_base(spark, t)
+    _run_commit(spark, clean, kind)
+    _crash_after_journal(monkeypatch)
+    with pytest.raises(_CrashAfterJournal):
+        _run_commit(spark, crashed, kind)
+    assert os.path.exists(os.path.join(crashed, SWAP_JOURNAL_NAME))
+    _recover_leftovers(crashed)
+    assert not os.path.exists(os.path.join(crashed, SWAP_JOURNAL_NAME))
+    assert _side_files(crashed) == _side_files(clean)
+    spark.catalog.refreshByPath(crashed)
+    rows = sorted(
+        tuple(r) for r in spark.read.parquet(crashed).collect()
+    )
+    assert rows == sorted(
+        tuple(r) for r in spark.read.parquet(clean).collect()
+    )
+
+
+@pytest.mark.parametrize("path", ["writer", "recovery"])
+@pytest.mark.parametrize("kind", ["merge", "overwrite"])
+def test_manifest_at_first_swap_covers_old_and_staged_ranges(
+    spark, monkeypatch, kind, path
+):
+    """Pre-swap superset: when the first partition swap starts, the
+    manifest on disk must already cover, for every installed partition,
+    both its old range and its staged range — a crash inside the swaps
+    then leaves the moved-key probe over-inclusive, never wrong. Holds
+    on the writer's own commit and on recovery's roll-forward alike."""
+    import json as _json
+
+    import tmdb_sync_spark.plans.partitioned as pp
+    from tmdb_sync_spark.plans import manifest as km
+
+    d = tempfile.mkdtemp(prefix="pm_jpre_")
+    target = f"{d}/t"
+    _keyed_base(spark, target)
+    with open(os.path.join(target, km.MANIFEST_NAME)) as fh:
+        old = _json.load(fh)["parts"]
+    seen: list = []
+    real_swap = pp._swap_partition
+
+    def recording_swap(target_dir, staging, pdir):
+        if not seen:
+            with open(os.path.join(target_dir, km.MANIFEST_NAME)) as fh:
+                seen.append(_json.load(fh)["parts"])
+            with open(os.path.join(target_dir, pp.SWAP_JOURNAL_NAME)) as fh:
+                seen.append(_json.load(fh)["ops"])
+        real_swap(target_dir, staging, pdir)
+
+    monkeypatch.setattr(pp, "_swap_partition", recording_swap)
+    if path == "recovery":
+        _crash_after_journal(monkeypatch)
+        with pytest.raises(_CrashAfterJournal):
+            _run_commit(spark, target, kind)
+        assert not seen
+        pp._recover_leftovers(target)
+    else:
+        _run_commit(spark, target, kind)
+    with open(os.path.join(target, km.MANIFEST_NAME)) as fh:
+        staged = _json.load(fh)["parts"]
+    at_swap, ops = seen
+    installs = [n for n, op in ops if op == "install"]
+    assert installs
+    for n in installs:
+        lo, hi = at_swap[n]
+        for rng in (old.get(n), staged[n]):
+            if rng is not None:
+                assert lo <= rng[0] and rng[1] <= hi, (n, at_swap[n], rng)

@@ -554,7 +554,7 @@ def cluster_components(
     density — the input to every label-propagation round — stays
     constant per vector as the corpus grows (the r6 ramp's 28.3 s x16
     blowup was exactly fixed-bits quadratic pair growth; the scaled
-    row is measured in scripts/exp_scale_ramp.py §D)."""
+    row is measured in scripts/exp_scale_ramp.py at cb774a3 §D)."""
     from tmdb_sync_spark.functions.similarity import (
         DUP_THRESHOLD, N_DUP_BITS, _dup_candidate_pairs,
     )
@@ -713,8 +713,8 @@ def min_label_components(
        under this engine's serial execution model; callers interleaving
        large independent shuffles on the same session should plan them
        outside this call. Two scoped alternatives were A/B'd in r12
-       (scripts/exp_components_conf_ab.py, both orderings to cancel the
-       JIT-warmup confound) and both measured ~2× slower warm at sf0.1:
+       (scripts/exp_components_conf_ab.py at cb774a3, both orderings to
+       cancel the JIT-warmup confound) and both measured ~2× slower warm at sf0.1:
        AQE-policy-only (``coalescePartitions.parallelismFirst=false``,
        partitions untouched) 7.7 s and plan-local
        ``repartition(loop_parts)`` 8.6 s vs 4.3 s shipped — coalescing

@@ -80,8 +80,8 @@ BROADCAST_PROBE_MAX_ROWS = 2_000_000
 # Auto-compaction policy (r9 verdict #5), shared by all three index
 # families: the append-only layout adds ≥1 file per touched bucket per
 # drop, so a year of daily drops makes probes FILE-OPEN-bound (measured
-# in scripts/exp_index_ramp.py / COVERAGE.md) — and compaction existed
-# but had to be called by hand. Now every append path checks the worst
+# in scripts/exp_index_ramp.py at cb774a3 / COVERAGE.md) — and compaction
+# existed but had to be called by hand. Now every append path checks the worst
 # bucket's data-file count AFTER its write, still under the writer lock
 # it already holds, and compacts when the count exceeds this threshold.
 # Amortization: compaction rewrites the whole index, so a threshold of
@@ -522,8 +522,8 @@ def dedup_against_index(
                 # repartition by the partition column first: without it
                 # every shuffle partition writes a sliver into every
                 # bucket dir (32×64 = 2048 tiny files per append —
-                # measured in scripts/exp_index_ramp.py); with it each
-                # append adds ONE file per touched bucket. The shuffle
+                # measured in scripts/exp_index_ramp.py at cb774a3); with
+                # it each append adds ONE file per touched bucket. The shuffle
                 # is of the DROP's band rows only — small by contract.
                 _band_rows(surviving_sig)
                 .repartition("bb")

@@ -28,8 +28,8 @@ The tiling is CONDITIONAL, decided by one bounded driver-side probe:
 when no group exceeds ``cap`` — every real corpus measured — the
 output plan IS the naive bucket equi-join, with zero replication,
 zero extra join machinery, and Spark free to pick broadcast-hash.
-Measured (scripts/exp_skew_guard.py): the always-tiled first draft
-cost +97% on the unskewed sf0.1 corpus and even LOST on the skewed
+Measured (scripts/exp_skew_guard.py at cb774a3): the always-tiled first
+draft cost +97% on the unskewed sf0.1 corpus and even LOST on the skewed
 one locally, because the local-scale naive plan is a broadcast join
 that is already parallel; the conditional form pays one count job.
 

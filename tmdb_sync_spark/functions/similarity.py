@@ -140,7 +140,9 @@ def _quantized_from(emb: DataFrame) -> DataFrame:
 # batches (the measured reason ann_ivf ran SLOWER at 32 cores than 8 in
 # BENCH_r12_c8). Partition count = ceil(footer_rows / this) capped at
 # the session parallelism: any at-scale corpus exceeds the cap, so the
-# 100 TB plan shape is untouched.
+# 100 TB plan shape is untouched. Scoped to the per-row scorers
+# (_quantized, the sign-LSH top-k): the pair-dedup family's work grows
+# with pairs, so _dup_candidate_pairs keeps the full spread.
 EMB_ROWS_PER_TASK = 4096
 
 
@@ -399,7 +401,7 @@ def ann_signlsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     and 0.125 for ~9/256 of the corpus scanned per query. The recall
     floor is pinned in tests/test_ann_recall.py; the full
     bits × radius sweep is recorded in COVERAGE.md
-    (scripts/exp_ann_recall.py).
+    (scripts/exp_ann_recall.py at cb774a3).
     """
     return ann_signlsh_topk_at(
         spark, sf_dir, N_SIGN_BITS, 3, hamming_radius=1
@@ -582,8 +584,8 @@ def _dup_candidate_pairs(
     queries keep the fixed default so oracle SQL stays stable; scale
     consumers pass :func:`scaled_dup_bits` of their corpus size to hold
     bucket occupancy — and therefore per-bucket pair density — constant
-    as the corpus grows (measured in scripts/exp_scale_ramp.py §B and
-    the cluster ramp row in COVERAGE.md).
+    as the corpus grows (measured in scripts/exp_scale_ramp.py at cb774a3
+    §B and the cluster ramp row in COVERAGE.md).
 
     The hot-group probe runs on the bucketed frame directly: the probe
     aggregates only ``bucket`` (Catalyst prunes the quantized vector
@@ -598,7 +600,10 @@ def _dup_candidate_pairs(
     """
     from tmdb_sync_spark.functions.pairs import tiled_self_pairs
 
-    b = _bucketed(spark, sf_dir, n_bits)
+    # the full spread, not EMB_ROWS_PER_TASK: this family's cost is the
+    # bucket pair volume, not the row count — keyed on rows, 2,000
+    # vectors got ONE task for the whole pair space
+    b = bucketed_from(parallel_table(spark, sf_dir, "embeddings"), n_bits)
     return tiled_self_pairs(
         b, "bucket", "vec_id",
         sym={
@@ -919,7 +924,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``N_CENTROIDS`` lists, top-``IVF_TOP_K``) carry a measured recall
     floor vs the exact kernel, pinned in tests/test_ann_recall.py; the
     n_probe-vs-recall sweep is recorded in COVERAGE.md
-    (scripts/exp_ann_recall.py).
+    (scripts/exp_ann_recall.py at cb774a3).
     """
     return ann_ivf_topk_at(spark, sf_dir, N_PROBE, IVF_TOP_K)
 

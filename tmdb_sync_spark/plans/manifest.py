@@ -17,21 +17,26 @@ entirely. This is the hand-rolled equivalent of a real table format's
 file-level column stats (Delta ``stats`` / Iceberg manifests), which is
 what the same call sites would use on a production cluster.
 
-Crash safety: the merge writes the manifest **twice** per run — before the
-partition swaps with the *union* of each touched partition's old and new
-ranges (a superset is always safe: the manifest may only over-include
+Crash safety: the apply step of the swap journal
+(``plans.partitioned._replay_swap_journal``, which every writer's commit
+and every crash recovery run) writes the manifest **twice** — before the
+partition swaps with the *union* of each installed partition's old and
+new ranges (a superset is always safe: the manifest may only over-include
 candidates, never exclude a partition that holds a key), and after the
 swaps with the exact staged ranges. A crash anywhere in between leaves a
-superset manifest; a missing or damaged manifest self-heals on the next
-load by re-harvesting footer stats (one-time O(#files) driver metadata
-read). Entries whose range is unknown (missing stats, non-scalar key
-types) are always candidates.
+superset manifest, and the next writer's recovery re-applies both. A
+missing or damaged manifest self-heals on the next load by re-harvesting
+footer stats (one-time O(#files) driver metadata read). Entries whose
+range is unknown (missing stats, non-scalar key types) are always
+candidates.
 """
 
 from __future__ import annotations
 
 import json
 import os
+
+from tmdb_sync_spark.util import write_json_atomic
 
 MANIFEST_NAME = "_key_manifest.json"
 HIVE_NULL_PART = "__HIVE_DEFAULT_PARTITION__"   # Spark's NULL partition dir
@@ -136,7 +141,7 @@ def load(target_dir: str, key: str, partition_col: str) -> dict:
 
 
 def save(target_dir: str, key: str, partition_col: str, parts: dict) -> None:
-    """Atomic (tmp + rename) manifest write."""
+    """Atomic, fsynced manifest write (:func:`util.write_json_atomic`)."""
     doc = {
         "version": 1, "key": key, "partition_col": partition_col,
         "parts": {
@@ -144,11 +149,7 @@ def save(target_dir: str, key: str, partition_col: str, parts: dict) -> None:
             for p, r in parts.items()
         },
     }
-    path = os.path.join(target_dir, MANIFEST_NAME)
-    tmp = path + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump(doc, fh)
-    os.replace(tmp, path)
+    write_json_atomic(os.path.join(target_dir, MANIFEST_NAME), doc)
 
 
 def union_range(a, b):

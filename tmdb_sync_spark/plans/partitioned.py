@@ -15,11 +15,17 @@ reference's per-year sync unit imply, ``app/mongo.py:28``,
    at the file index — ``.explain`` shows ``PartitionFilters``);
 3. full-outer-join MERGE against the source;
 4. write the merged result to a staging dir partitioned the same way;
-5. atomically swap only the touched partition directories.
+5. swap only the touched partition directories.
 
-On a local/HDFS filesystem the swap is a directory move; on object stores
-this step is the job-committer's problem (or a real table format's) — the
-read/merge plan above is identical either way.
+Every writer (merge, full overwrite, the index compactions) commits the
+same way: plan → journal → apply. After its staging write it only PLANS
+— the ordered ``[name, install|delete]`` swap ops, the manifest plan
+and the schema record — then :func:`_commit` journals that plan by
+atomic rename (the commit point) and applies it with
+:func:`_replay_swap_journal`, the very code crash recovery runs on a
+pending journal. On a local/HDFS filesystem a swap is a directory move;
+on object stores this step is the job-committer's problem (or a real
+table format's) — the read/merge plan above is identical either way.
 
 Cross-partition key moves (a row whose partition value changes — e.g. a
 movie's ``year`` corrected between syncs, since ``year`` derives from the
@@ -65,8 +71,8 @@ from tmdb_sync_spark.util import (
     ConcurrentWriterError,
     acquire_dir_lock,
     release_dir_lock,
-    fsync_dir,
     fsync_tree,
+    write_json_atomic,
 )
 
 
@@ -77,44 +83,30 @@ def write_partitioned(
     if_not_exists: bool = False,
     lock_wait_s: float = 0.0,
 ) -> bool:
-    """Full overwrite of a hive-partitioned table via the merge path's
-    staging + per-partition swap + leftover-recovery protocol.
+    """Full overwrite of a hive-partitioned table: plan → journal →
+    apply, the commit path every writer shares (module docstring).
 
     ``cluster_by`` locally sorts each task's output so parquet row-group
     key stats are tight from the first write (the same clustering the
     merge's staging writes apply). ``manifest_key`` maintains the
-    per-partition key-range manifest (pre-swap superset, post-swap exact
-    — same two-write discipline as the merge) so the first merge needn't
-    harvest it lazily.
+    per-partition key-range manifest so the first merge needn't harvest
+    it lazily; without it a stale manifest is dropped.
 
-    Crash safety (closes the r5 verdict's documented mid-write window):
-    the previous implementation let Spark overwrite ``path`` in place,
-    which cleared the directory — held lock included — before the new
-    files committed; a crash mid-write left a partial table, and a merge
-    arriving in the cleared window could race. Now the new table is
-    written to a staging dir first (a crash there leaves the live table
-    untouched), then installed with the same dot-prefixed rename-aside
-    ``_swap_partition`` the merge uses. The table's ``_merge.lock`` is
-    held throughout and the directory is never cleared, so overwrite and
+    The new table is written to a staging dir first (a crash there
+    leaves the live table untouched and the staging dir discardable).
+    The plan installs every staged partition and deletes every existing
+    one with no staged twin (``.del`` protocol: finished, never
+    restored, by recovery). :func:`_commit` journals it to
+    ``_swap.journal`` by atomic rename — the commit point — and applies
+    it with the replay that every writer's entry point
+    (:func:`_recover_leftovers`, under the lock) runs on a pending
+    journal, so a crash anywhere after the rename rolls the overwrite
+    FORWARD and never leaves a mix of old and new partitions. This is
+    the write-ahead-intent role a real table format's commit log plays
+    (Delta's _delta_log, Iceberg's metadata pointer), reduced to one
+    file + deterministic replay. The table's ``_merge.lock`` is held
+    throughout and the directory is never cleared, so overwrite and
     merge are fully mutually exclusive.
-
-    TABLE-level atomicity via a roll-forward journal: per-partition swaps
-    alone would leave a crash mid-loop as a MIX of old and new partitions
-    — atomic per partition but a semantically torn table for a full
-    overwrite. So once staging has committed, the full swap plan
-    (ordered installs + deletes, the exact post-swap manifest, the
-    schema record) is journaled to ``_swap.journal`` by atomic rename,
-    and every writer's entry point (:func:`_recover_leftovers`, under
-    the lock) ROLLS FORWARD a pending journal before doing anything
-    else. The commit point is the journal rename — before it, a crash
-    discards staging and the old table stands; after it, every entry
-    completes the new table. This is the same write-ahead-intent role a
-    real table format's commit log plays (Delta's _delta_log, Iceberg's
-    metadata pointer), reduced to one file + deterministic replay; the
-    partitioned MERGE commits through the same journal
-    (:func:`_write_swap_journal`). Partitions absent from the new data
-    are deleted through the ``.del`` protocol (finished, never restored,
-    by recovery).
 
     ``if_not_exists``: re-check :func:`table_exists` UNDER the writer
     lock and no-op (returning ``False``) when the table already
@@ -166,50 +158,22 @@ def write_partitioned_locked(
     # staged partitions install; existing ones with no staged twin are
     # full-overwrite deletes (handled by _swap_partition's .del path)
     deletes = [n for n in sorted(existing) if n not in staged_names]
-    swap_names = staged_names + deletes
-    schema_rec = _schema_record(df.schema, partition_col)
-    manifest_path = os.path.join(path, km.MANIFEST_NAME)
     if manifest_key:
-        staged_ranges = {
+        manifest_plan = {"key": manifest_key, "post": {
             n: km.footer_range(os.path.join(staging, n), manifest_key)
             for n in staged_names
-        }
-        manifest_plan = {"key": manifest_key, "post": staged_ranges}
+        }}
     else:
         # a manifest maintained by earlier merges no longer describes
         # the table once it's overwritten; drop it so the next merge
         # re-harvests footer stats instead of pruning on stale ranges
         manifest_plan = {"drop": True}
-    # COMMIT POINT: journal the swap plan (atomic rename). Before
-    # this, a crash leaves the old table + a discardable staging dir;
-    # after it, recovery rolls the overwrite FORWARD to completion.
-    _write_swap_journal(
+    _commit(
         path, staging, partition_col,
         [[n, "install"] for n in staged_names]
         + [[n, "delete"] for n in deletes],
-        manifest_plan, schema_rec,
+        manifest_plan, _schema_record(df.schema, partition_col),
     )
-    if manifest_key:
-        # pre-swap superset write: old ∪ staged per installed
-        # partition, old ranges retained for pending deletes — a
-        # crash anywhere in the swap loop leaves the manifest
-        # over-inclusive, never wrong
-        pre = km.load(path, manifest_key, partition_col)
-        for n in staged_names:
-            pre[n] = (
-                km.union_range(pre[n], staged_ranges[n])
-                if n in pre else staged_ranges[n]
-            )
-        km.save(path, manifest_key, partition_col, pre)
-    elif os.path.exists(manifest_path):
-        os.unlink(manifest_path)
-    for n in swap_names:
-        _swap_partition(path, staging, n)
-    if manifest_key:
-        km.save(path, manifest_key, partition_col, staged_ranges)
-    _save_schema_record(path, schema_rec)
-    os.unlink(os.path.join(path, SWAP_JOURNAL_NAME))
-    shutil.rmtree(staging, ignore_errors=True)
     df.sparkSession.catalog.refreshByPath(path)
     return True
 
@@ -323,13 +287,7 @@ def _schema_record(schema, partition_col: str) -> dict:
 
 
 def _save_schema_record(target_dir: str, rec: dict) -> None:
-    sp = os.path.join(target_dir, SCHEMA_NAME)
-    tmp = f"{sp}.tmp.{os.getpid()}"
-    with open(tmp, "w") as fh:
-        json.dump(rec, fh)
-        fh.flush()
-        os.fsync(fh.fileno())
-    os.replace(tmp, sp)
+    write_json_atomic(os.path.join(target_dir, SCHEMA_NAME), rec)
 
 
 def table_exists(path: str) -> bool:
@@ -442,8 +400,8 @@ def _write_swap_journal(
     target_dir: str, staging: str, partition_col: str,
     ops: Sequence, manifest_plan: dict | None, schema_record: dict,
 ) -> None:
-    """Atomically (tmp + rename) record a writer's swap plan — the
-    COMMIT POINT shared by full overwrite and partitioned MERGE.
+    """Atomically record a writer's swap plan — the COMMIT POINT every
+    writer reaches through :func:`_commit`.
 
     The journal's existence means staging is complete (it is written
     only after Spark's staging write returns) and the post-state MUST be
@@ -460,38 +418,50 @@ def _write_swap_journal(
     # files over the good old partitions (util.fsync_tree docstring).
     if os.path.isdir(staging):
         fsync_tree(staging)
-    jpath = os.path.join(target_dir, SWAP_JOURNAL_NAME)
-    tmp = f"{jpath}.tmp.{os.getpid()}"
-    with open(tmp, "w") as fh:
-        json.dump(
-            {
-                "staging": staging,
-                "partition_col": partition_col,
-                "ops": [list(op) for op in ops],
-                "manifest": manifest_plan,
-                "schema_record": schema_record,
-            },
-            fh,
-        )
-        fh.flush()
-        os.fsync(fh.fileno())
-    os.rename(tmp, jpath)
     # the COMMIT POINT must survive power loss, not just process crash:
-    # the rename lives in the directory entry — fsync the dir too
-    fsync_dir(target_dir)
+    # write_json_atomic fsyncs the file and the dir holding the rename
+    write_json_atomic(os.path.join(target_dir, SWAP_JOURNAL_NAME), {
+        "staging": staging,
+        "partition_col": partition_col,
+        "ops": [list(op) for op in ops],
+        "manifest": manifest_plan,
+        "schema_record": schema_record,
+    })
+
+
+def _commit(
+    target_dir: str, staging: str, partition_col: str,
+    ops: Sequence, manifest_plan: dict | None, schema_record: dict,
+) -> None:
+    """Journal a writer's swap plan (the commit point), then apply it
+    with :func:`_replay_swap_journal` — the same code recovery runs on a
+    pending journal, so a crash anywhere in the apply resumes exactly
+    where the normal path stopped."""
+    _write_swap_journal(
+        target_dir, staging, partition_col, ops, manifest_plan,
+        schema_record,
+    )
+    _replay_swap_journal(target_dir)
 
 
 def _replay_swap_journal(target_dir: str) -> None:
-    """Complete (or discard) an interrupted overwrite/merge. Lock held.
+    """Apply a journaled swap plan, or discard uncommitted staging. Lock
+    held. This is the apply step of every writer (:func:`_commit`) AND
+    the crash recovery of every writer's entry point — one code path.
 
-    - Journal present → staging committed before the crash: roll the
-      write FORWARD, in journal order. Install ops whose staged dir is
-      still in staging run the normal swap; ones already moved out are
-      done (any half-swap residue is a dot-prefixed dir the caller's
-      generic leftover pass finishes). Delete ops re-run idempotently.
-      The journal's exact post-swap manifest and schema record are then
-      installed and the journal removed — a crash inside replay itself
-      just replays again.
+    - Journal present → staging committed: apply the plan FORWARD, in
+      journal order.
+      1. Pre-swap manifest: a keyed plan saves the current manifest
+         with each install op's ``post`` range unioned in (a superset is
+         always safe — a crash anywhere in the swaps leaves the manifest
+         over-inclusive, never wrong); ``{"drop": true}`` unlinks it.
+      2. Swaps: install ops whose staged dir is still in staging run
+         the normal swap; ones already moved out are done (any half-swap
+         residue is a dot-prefixed dir the caller's generic leftover
+         pass finishes). Delete ops re-run idempotently.
+      3. The exact post-swap manifest and the schema record are
+         written, the journal is removed, then staging — a crash inside
+         the apply itself just applies again.
     - No journal but a staging dir → the writer crashed before its
       commit point: the current table is the truth (an uncommitted
       overwrite never happened; an uncommitted merge batch is simply
@@ -521,6 +491,20 @@ def _replay_swap_journal(target_dir: str) -> None:
             "half-applied write without its swap plan; inspect the "
             "table and remove the journal by hand"
         ) from e
+    mp = os.path.join(target_dir, km.MANIFEST_NAME)
+    keyed = bool(manifest_plan) and not manifest_plan.get("drop")
+    if keyed:
+        key, post = manifest_plan["key"], manifest_plan["post"]
+        pre = km.load(target_dir, key, partition_col)
+        for n, kind in ops:
+            if kind == "install":
+                pre[n] = (
+                    km.union_range(pre[n], post.get(n))
+                    if n in pre else post.get(n)
+                )
+        km.save(target_dir, key, partition_col, pre)
+    elif manifest_plan and os.path.exists(mp):
+        os.unlink(mp)
     for n, kind in ops:
         if kind == "install" and not os.path.isdir(os.path.join(staging, n)):
             # Legitimately reachable ONLY as "already moved into the
@@ -543,16 +527,8 @@ def _replay_swap_journal(target_dir: str) -> None:
                 )
             continue
         _swap_partition(target_dir, staging, n)  # src absent → .del path
-    if manifest_plan:
-        if manifest_plan.get("drop"):
-            mp = os.path.join(target_dir, km.MANIFEST_NAME)
-            if os.path.exists(mp):
-                os.unlink(mp)
-        else:
-            km.save(
-                target_dir, manifest_plan["key"], partition_col,
-                manifest_plan["post"],
-            )
+    if keyed:
+        km.save(target_dir, key, partition_col, post)
     if j.get("schema_record"):
         _save_schema_record(target_dir, j["schema_record"])
     os.unlink(jpath)
@@ -919,61 +895,31 @@ def _merge_locked(
                 "partition-dir rendering diverged; refusing to skip the "
                 "emptied-partition delete"
             )
-    # maintain whenever probing is on (manifest may be None for an empty
-    # batch) or a manifest already exists from a probing caller
-    maintain = detect_moved_keys or os.path.exists(
-        os.path.join(target_dir, km.MANIFEST_NAME)
-    )
+    # maintain the manifest whenever probing is on (manifest may be None
+    # for an empty batch) or one already exists from a probing caller
     manifest_plan = None
-    if maintain:
+    if detect_moved_keys or os.path.exists(
+        os.path.join(target_dir, km.MANIFEST_NAME)
+    ):
         if manifest is None:
             manifest = km.load(target_dir, keys[0], partition_col)
-        staged_ranges = {
+        # exact post-swap manifest: swapped partitions take their staged
+        # footer ranges, emptied ones drop out
+        post = {p: r for p, r in manifest.items() if p not in swap_names}
+        post.update({
             n: km.footer_range(os.path.join(staging, n), keys[0])
             for n in staged_names
-        }
-        # pre-swap safety write: union(old, staged) per swapped partition
-        # — a superset range is always safe; a crash anywhere in the swap
-        # window leaves the manifest over-inclusive, never wrong. The
-        # post-swap exact state (installed partitions get their staged
-        # ranges, emptied ones drop out) is computed NOW so the journal
-        # can carry it for replay.
-        pre = dict(manifest)
-        for n in swap_names:
-            if n in staged_ranges:
-                pre[n] = (
-                    km.union_range(manifest[n], staged_ranges[n])
-                    if n in manifest else staged_ranges[n]
-                )
-        post = {p: r for p, r in pre.items() if p not in swap_names}
-        post.update(staged_ranges)
+        })
         manifest_plan = {"key": keys[0], "post": post}
-    schema_rec = _schema_record(to_write.schema, partition_col)
-    # COMMIT POINT (round 6): the merge used to rely on "re-run the
-    # idempotent batch" to repair a crash mid-swap — correct, but only if
-    # someone re-runs it. Journaling the ordered swap plan (the
-    # delete-before-insert moved-key order rides in the list) makes a
-    # crashed merge roll FORWARD at the next writer's entry instead:
-    # before this rename the batch simply never applied (staging is
-    # discarded); after it, recovery completes it. Same protocol and
-    # replay code as the full overwrite.
-    _write_swap_journal(
+    # the ordered plan carries the delete-before-insert moved-key order;
+    # a crash after the journal rename rolls the batch FORWARD at the
+    # next writer's entry, before it the batch never applied
+    _commit(
         target_dir, staging, partition_col,
         [[n, "install" if n in staged_names else "delete"]
          for n in swap_names],
-        manifest_plan, schema_rec,
+        manifest_plan, _schema_record(to_write.schema, partition_col),
     )
-    if maintain:
-        km.save(target_dir, keys[0], partition_col, pre)
-    for n in swap_names:
-        _swap_partition(target_dir, staging, n)
-    if maintain:
-        km.save(target_dir, keys[0], partition_col, post)
-    # keep the readers' schema current: read_partitioned reads with it,
-    # including after a merge emptied every partition
-    _save_schema_record(target_dir, schema_rec)
-    os.unlink(os.path.join(target_dir, SWAP_JOURNAL_NAME))
-    shutil.rmtree(staging, ignore_errors=True)
     # Spark's session-wide FileStatusCache would otherwise serve the old
     # listing (deleted part files) to subsequent reads of this path.
     spark.catalog.refreshByPath(target_dir)

@@ -130,8 +130,8 @@ def ingest_file_stream(
     unbounded sweep folds EVERY pending drop into one batch — the right
     default (each batch pays a fixed index-scan + journaled-swap +
     profile-write constant, measured ~8 s at sf0.1 in
-    scripts/exp_ingest_drops.py, so fewer batches = cheaper) — but a
-    multi-TB backlog swept as one batch is a memory cliff; the bound
+    scripts/exp_ingest_drops.py at cb774a3, so fewer batches = cheaper) —
+    but a multi-TB backlog swept as one batch is a memory cliff; the bound
     restores bounded-batch processing at the cost of one fixed constant
     per N files. Exactly-once is unchanged either way (each batch
     commits through the same checkpoint + idempotent sinks)."""
@@ -200,8 +200,8 @@ def ingest_file_stream(
                     F.length("text").cast(schema["n_chars"].dataType),
                 )
         # Pin the parse ONCE per batch (r9, measured in
-        # scripts/exp_ingest_drops.py): the sink's consumers — dead
-        # count + write, the key fold, the index probe, the MERGE, the
+        # scripts/exp_ingest_drops.py at cb774a3): the sink's consumers —
+        # dead count + write, the key fold, the index probe, the MERGE, the
         # index append, the profile write — are separate actions, and
         # without a pin EVERY one re-reads the batch's source files and
         # re-runs from_json (+ the Arrow normalize pass when enabled).

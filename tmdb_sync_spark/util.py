@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import atexit
+import json
 import os
 import shutil
 import tempfile
@@ -245,6 +246,21 @@ def fsync_dir(path: str) -> None:
         pass
     finally:
         os.close(fd)
+
+
+def write_json_atomic(path: str, doc) -> None:
+    """Publish ``doc`` as JSON at ``path``, atomic and power-loss
+    durable: a pid-unique tmp file (two writers never share one) is
+    fsynced, renamed over ``path`` with ``os.replace``, and the
+    directory holding the rename is fsynced (:func:`fsync_dir`). A crash
+    leaves either the old file or the new one, never a torn one."""
+    tmp = f"{path}.tmp.{os.getpid()}"
+    with open(tmp, "w") as fh:
+        json.dump(doc, fh)
+        fh.flush()
+        os.fsync(fh.fileno())
+    os.replace(tmp, path)
+    fsync_dir(os.path.dirname(path) or ".")
 
 
 def fsync_tree(root: str) -> None:
