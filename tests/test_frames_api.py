@@ -141,6 +141,8 @@ def test_report_frame_appends(spark, state, tmp_path):
     assert len(rows) == 2                       # blind insert, no dedup
     assert {r["reason"] for r in rows} == {"not_a_scene"}
     assert all(r["ts"] is not None for r in rows)
+    assert {r["reporter"] for r in rows} == {"qa", None}
+    assert dict(spark.read.parquet(reports).dtypes)["movie_id"] == "bigint"
     with pytest.raises(ValueError, match="200"):
         report_frame(spark, reports, movie_id=1, path="/b.jpg",
                      reason="x" * 201)

@@ -304,6 +304,19 @@ def test_reports_stats_rollup(spark, tmp_path):
     assert rows[(8, "/a.jpg", "tv")]["count"] == 1
 
 
+def test_reports_stats_before_first_report(spark, tmp_path):
+    """A fresh install has no reports dir yet: the rollup is empty (the
+    reference aggregates an empty collection to ``[]``), with the same
+    columns it has once reports exist."""
+    from tmdb_sync_spark.api import report_frame, reports_stats
+
+    reports = str(tmp_path / "reports")
+    empty = reports_stats(spark, reports)
+    assert empty.collect() == []
+    report_frame(spark, reports, movie_id=7, path="/a.jpg")
+    assert empty.schema == reports_stats(spark, reports).schema
+
+
 def test_concurrent_top_and_years_jobs_interleave(spark, tmp_path):
     """The reference launches top and years syncs as concurrent
     background tasks against one collection; here two threads drive both

@@ -1,47 +1,51 @@
-"""Per-partition key min/max manifest for the partitioned MERGE.
+"""Per-partition exact key sets for the partitioned MERGE and point reads.
 
 The moved-key probe in ``plans.partitioned`` must answer: *which other
-partitions could hold a key from this batch?* Round 3 answered with one
-global ``key BETWEEN batch_min AND batch_max`` predicate — row-group
-pruned, but for a batch of uniformly distributed keys the range spans the
-whole table and prunes nothing, making the probe O(table I/O) per merge.
-
-This module is the scale fix: a driver-side manifest (``_key_manifest.json``
-inside the table dir — underscore-prefixed, so Spark's file listing skips
-it) mapping each partition directory to the ``[min, max]`` range of its
-merge-key column, harvested from parquet **footer statistics** (no data
-pages read) and kept current by the merge itself. Partitions whose range
-cannot intersect any of the batch's per-partition key spans are skipped
-*before any file read*; when nothing intersects, the probe job is skipped
-entirely. This is the hand-rolled equivalent of a real table format's
-file-level column stats (Delta ``stats`` / Iceberg manifests), which is
-what the same call sites would use on a production cluster.
+partitions could hold a key from this batch?* — and a point read: *which
+partition holds this key?* Min/max key ranges cannot answer either when
+keys interleave across partitions (the movies table's top-feed ids
+1..2743 widen the range of every partition from 1950 on), so this module
+keeps exact metadata apart from the data: a driver-side manifest
+(``_key_manifest.json`` inside the table dir — underscore-prefixed, so
+Spark's file listing skips it) mapping each partition directory to the
+SORTED list of the distinct non-null values of its merge-key column.
+A list is harvested by reading only the key column of the partition's
+parquet files with pyarrow on the driver (no Spark job) and is kept
+current by every writer's commit. A partition is a candidate only when
+its list holds a value inside one of the batch's per-partition key spans
+(``bisect``): a point read opens exactly the partition holding the key,
+and when no other partition holds a batch-span key the probe job is
+skipped entirely. NULL keys are never listed; the probe's range
+predicate and the point read's equality never match them either.
 
 Crash safety: the apply step of the swap journal
 (``plans.partitioned._replay_swap_journal``, which every writer's commit
 and every crash recovery run) writes the manifest **twice** — before the
 partition swaps with the *union* of each installed partition's old and
-new ranges (a superset is always safe: the manifest may only over-include
-candidates, never exclude a partition that holds a key), and after the
-swaps with the exact staged ranges. A crash anywhere in between leaves a
-superset manifest, and the next writer's recovery re-applies both. A
-missing or damaged manifest self-heals on the next load by re-harvesting
-footer stats (one-time O(#files) driver metadata read). Entries whose
-range is unknown (missing stats, non-scalar key types) are always
-candidates.
+new key sets (a superset is always safe: the manifest may only
+over-include candidates, never exclude a partition that holds a key),
+and after the swaps with the exact staged sets. A crash anywhere in
+between leaves a superset manifest, and the next writer's recovery
+re-applies both. A missing, damaged or older-version manifest self-heals
+on the next load by re-harvesting the key columns (one-time O(#files)
+driver read). Entries whose set is unknown (unreadable files, key types
+that are not JSON-stable scalars) are always candidates.
 """
 
 from __future__ import annotations
 
 import json
 import os
+from bisect import bisect_left
 
 from tmdb_sync_spark.util import write_json_atomic
 
 MANIFEST_NAME = "_key_manifest.json"
+VERSION = 2
 HIVE_NULL_PART = "__HIVE_DEFAULT_PARTITION__"   # Spark's NULL partition dir
 
-# ranges are (kmin, kmax) tuples, or None = unknown (always a candidate)
+# key sets are sorted lists of distinct scalars, or None = unknown
+# (always a candidate)
 
 
 def _is_part_dir(entry: str, partition_col: str) -> bool:
@@ -49,84 +53,91 @@ def _is_part_dir(entry: str, partition_col: str) -> bool:
     return entry.startswith(f"{partition_col}=")
 
 
-def footer_range(pdir_path: str, key: str):
-    """Min/max of ``key`` across all parquet footers under one partition
-    dir — metadata only, no data pages. Returns None when any file lacks
-    usable stats or the values aren't JSON-round-trippable scalars."""
-    try:
-        import pyarrow.parquet as pq
+def harvest_keys(pdir_path: str, key: str):
+    """Sorted distinct non-null values of ``key`` across the parquet
+    files under one partition dir, read with pyarrow on the driver (the
+    key column only). Returns None when a file is unreadable or lacks
+    the column, or the key type is not a JSON-stable scalar (integer,
+    float without NaN, string)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
 
-        kmin = kmax = None
+    try:
+        chunks = []
         for f in sorted(os.listdir(pdir_path)):
             if f.startswith(("_", ".")) or not f.endswith(".parquet"):
                 continue
-            md = pq.ParquetFile(os.path.join(pdir_path, f)).metadata
-            idx = next(
-                (i for i in range(md.num_columns)
-                 if md.schema.column(i).name == key), None)
-            if idx is None:
+            pf = pq.ParquetFile(os.path.join(pdir_path, f))
+            if key not in pf.schema_arrow.names:
                 return None
-            for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(idx).statistics
-                if st is None or not st.has_min_max:
-                    return None
-                kmin = st.min if kmin is None else min(kmin, st.min)
-                kmax = st.max if kmax is None else max(kmax, st.max)
-    except Exception:
-        return None
-    if kmin is None:        # zero data files / all-null column
-        return None
-    if isinstance(kmin, bool) or not isinstance(kmin, (int, float, str)):
-        return None         # not a JSON-stable scalar → treat as unknown
-    return (kmin, kmax)
-
-
-def _is_valid_range(r) -> bool:
-    # each range must be a [kmin, kmax] pair of JSON scalars of one type
-    # (the shape save() writes): anything else — truncated lists, nulls,
-    # nested junk from a damaged-but-parseable file — degrades the whole
-    # manifest to a footer re-harvest rather than silently mis-pruning
-    # the moved-key probe (a wrong range means a moved key is never
-    # relocated: a permanent duplicate).
-    return (
-        isinstance(r, list)
-        and len(r) == 2
-        and all(
-            not isinstance(v, bool) and isinstance(v, (int, float, str))
-            for v in r
+            chunks.append(pf.read(columns=[key]).column(key))
+        if not chunks:
+            return []
+        col = pa.chunked_array(
+            [c for ch in chunks for c in ch.chunks], type=chunks[0].type
         )
-        and type(r[0]) is type(r[1])
+    except (OSError, pa.ArrowException):
+        return None
+    t = col.type
+    if pa.types.is_floating(t):
+        if pc.any(pc.is_nan(col)).as_py():
+            return None
+    elif not (pa.types.is_integer(t) or pa.types.is_string(t)
+              or pa.types.is_large_string(t)):
+        return None         # not a JSON-stable scalar → treat as unknown
+    return sorted(pc.unique(col).drop_null().to_pylist())
+
+
+def _is_valid_keys(r) -> bool:
+    # each set must be a strictly increasing list of JSON scalars of one
+    # type (the shape save() writes): anything else — nulls, nested junk,
+    # unsorted or mixed-type lists from a damaged-but-parseable file —
+    # degrades the whole manifest to a re-harvest rather than silently
+    # mis-pruning (a wrong set means a moved key is never relocated — a
+    # permanent duplicate — or a point read misses its row).
+    if not isinstance(r, list):
+        return False
+    if not r:
+        return True
+    t = type(r[0])
+    return (
+        t in (int, float, str)
+        and all(type(v) is t for v in r)
+        and all(a < b for a, b in zip(r, r[1:]))
     )
 
 
-def load(target_dir: str, key: str, partition_col: str) -> dict:
-    """Manifest as ``{pdir_name: (kmin, kmax) | None}``, reconciled with
-    the live directory listing: stale entries (no dir) drop out, dirs the
-    manifest doesn't know get footer-harvested on the spot. A missing,
-    corrupt, or differently-keyed manifest file degrades to a full footer
-    harvest — never an error."""
-    entries: dict = {}
+def stored(target_dir: str, key: str, partition_col: str) -> dict | None:
+    """The key sets as last saved, ``{pdir_name: [keys] | None}``, or
+    None when the manifest file is missing, unparseable, of another
+    version, kept for another key or partition column, or damaged."""
     try:
         with open(os.path.join(target_dir, MANIFEST_NAME)) as fh:
             doc = json.load(fh)
-        # valid JSON is not necessarily a valid manifest (`null`, a list,
-        # a non-dict "parts") — shape failures degrade like parse failures
-        if (
-            isinstance(doc, dict)
-            and doc.get("key") == key
-            and doc.get("partition_col") == partition_col
-            and isinstance(doc.get("parts", {}), dict)
-            and all(
-                r is None or _is_valid_range(r)
-                for r in doc.get("parts", {}).values()
-            )
-        ):
-            entries = {
-                p: (None if r is None else (r[0], r[1]))
-                for p, r in doc.get("parts", {}).items()
-            }
-    except (OSError, ValueError, TypeError, IndexError, AttributeError):
-        entries = {}
+    except (OSError, ValueError):
+        return None
+    # valid JSON is not necessarily a valid manifest (`null`, a list,
+    # a non-dict "parts", a version-1 range file) — shape failures
+    # degrade like parse failures
+    if not (
+        isinstance(doc, dict)
+        and doc.get("version") == VERSION
+        and doc.get("key") == key
+        and doc.get("partition_col") == partition_col
+        and isinstance(doc.get("parts"), dict)
+        and all(r is None or _is_valid_keys(r)
+                for r in doc["parts"].values())
+    ):
+        return None
+    return doc["parts"]
+
+
+def reconcile(target_dir: str, key: str, partition_col: str,
+              entries: dict) -> dict:
+    """``entries`` reconciled with the live directory listing: stale
+    entries (no dir) drop out, dirs they don't know get harvested on the
+    spot."""
     out: dict = {}
     if not os.path.isdir(target_dir):
         return out
@@ -135,50 +146,58 @@ def load(target_dir: str, key: str, partition_col: str) -> dict:
             continue
         if not os.path.isdir(os.path.join(target_dir, e)):
             continue
-        out[e] = entries[e] if e in entries else footer_range(
+        out[e] = entries[e] if e in entries else harvest_keys(
             os.path.join(target_dir, e), key)
     return out
+
+
+def load(target_dir: str, key: str, partition_col: str) -> dict:
+    """Manifest as ``{pdir_name: [keys] | None}`` for the live listing
+    (:func:`reconcile`). A missing, corrupt, older-version or
+    differently-keyed manifest file degrades to a full harvest — never an
+    error."""
+    return reconcile(
+        target_dir, key, partition_col,
+        stored(target_dir, key, partition_col) or {},
+    )
 
 
 def save(target_dir: str, key: str, partition_col: str, parts: dict) -> None:
     """Atomic, fsynced manifest write (:func:`util.write_json_atomic`)."""
     doc = {
-        "version": 1, "key": key, "partition_col": partition_col,
-        "parts": {
-            p: (None if r is None else [r[0], r[1]])
-            for p, r in parts.items()
-        },
+        "version": VERSION, "key": key, "partition_col": partition_col,
+        "parts": parts,
     }
     write_json_atomic(os.path.join(target_dir, MANIFEST_NAME), doc)
 
 
-def union_range(a, b):
-    """Smallest range covering both; unknown poisons (stays a candidate)."""
+def union_keys(a, b):
+    """Sorted union of two key sets; unknown poisons (stays a candidate)."""
     if a is None or b is None:
         return None
     try:
-        return (min(a[0], b[0]), max(a[1], b[1]))
+        return sorted(set(a) | set(b))
     except TypeError:
         return None
 
 
+def _holds_any(keys: list, spans: list) -> bool:
+    # does the sorted list hold a value inside any [lo, hi] span?
+    try:
+        for lo, hi in spans:
+            i = bisect_left(keys, lo)
+            if i < len(keys) and keys[i] <= hi:
+                return True
+    except TypeError:
+        return True         # type-incomparable → conservatively a hit
+    return False
+
+
 def candidates(manifest: dict, touched_dirs: set, spans: list) -> list:
-    """Partition dirs (outside ``touched_dirs``) whose key range could
-    intersect any of the batch's per-partition key spans. Unknown ranges
+    """Partition dirs (outside ``touched_dirs``) whose key set holds a
+    value inside any of the batch's ``(lo, hi)`` key spans. Unknown sets
     and type-incomparable values are conservatively candidates."""
-    out = []
-    for p, rng in manifest.items():
-        if p in touched_dirs:
-            continue
-        if rng is None:
-            out.append(p)
-            continue
-        try:
-            hit = any(
-                not (rng[1] < lo or hi < rng[0]) for lo, hi in spans
-            )
-        except TypeError:
-            hit = True
-        if hit:
-            out.append(p)
-    return out
+    return [
+        p for p, keys in manifest.items()
+        if p not in touched_dirs and (keys is None or _holds_any(keys, spans))
+    ]

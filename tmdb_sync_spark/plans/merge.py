@@ -142,6 +142,12 @@ def merge_into(
     out: list[Column] = []
     for c in target.columns:
         in_source = c in source.columns
+        if not (in_source or c in matched_update or c in not_matched_insert):
+            # kept on a match, NULL on an insert: that is the outer join's
+            # own t.c, so skip the CASE (a one-row moderation MERGE leaves
+            # most of a wide target's columns like this)
+            out.append(F.col(f"t.{c}").alias(c))
+            continue
         upd = matched_update.get(
             c, F.col(f"s.{c}") if in_source else F.col(f"t.{c}")
         )

@@ -31,10 +31,10 @@ Cross-partition key moves (a row whose partition value changes — e.g. a
 movie's ``year`` corrected between syncs, since ``year`` derives from the
 API-mutable ``release_date``) are handled: before the merge, source keys
 are probed against the *other* partitions. The probe is pruned at THREE
-levels before any data page is read: (1) the per-partition key min/max
-manifest (``plans.manifest`` — parquet footer stats maintained by the
-merge itself, the hand-rolled equivalent of Delta/Iceberg file stats)
-drops every partition whose key range cannot intersect the batch's
+levels before any data page is read: (1) the per-partition exact key-set
+manifest (``plans.manifest`` — the sorted distinct keys of each
+partition, harvested from its key column and maintained by every
+commit) drops every partition that holds no key inside the batch's
 per-partition key spans — when nothing survives, the probe job never
 runs; (2) the surviving partitions are read by PATH (file-index level,
 untouched dirs never listed); (3) a batch key-range predicate lets
@@ -48,7 +48,10 @@ emptied — so the reference's global unique-key invariant
 (``app/mongo.py:15``) holds across partition moves exactly as its keyed
 Mongo upsert does (``app/catalog/upsert.py:99-103``). Callers with a
 provably immutable partition key can pass ``detect_moved_keys=False`` to
-skip the probe entirely.
+skip the probe entirely. The same manifest lets a point read
+(:func:`read_partitioned_for_key`) open only the partition holding the
+key, and the merge reads its touched partitions by path with the stored
+schema, so building its target frame runs no Spark job.
 """
 
 from __future__ import annotations
@@ -89,7 +92,7 @@ def write_partitioned(
     ``cluster_by`` locally sorts each task's output so parquet row-group
     key stats are tight from the first write (the same clustering the
     merge's staging writes apply). ``manifest_key`` maintains the
-    per-partition key-range manifest so the first merge needn't harvest
+    per-partition key-set manifest so the first merge needn't harvest
     it lazily; without it a stale manifest is dropped.
 
     The new table is written to a staging dir first (a crash there
@@ -160,13 +163,13 @@ def write_partitioned_locked(
     deletes = [n for n in sorted(existing) if n not in staged_names]
     if manifest_key:
         manifest_plan = {"key": manifest_key, "post": {
-            n: km.footer_range(os.path.join(staging, n), manifest_key)
+            n: km.harvest_keys(os.path.join(staging, n), manifest_key)
             for n in staged_names
         }}
     else:
         # a manifest maintained by earlier merges no longer describes
         # the table once it's overwritten; drop it so the next merge
-        # re-harvests footer stats instead of pruning on stale ranges
+        # re-harvests the key sets instead of pruning on stale ones
         manifest_plan = {"drop": True}
     _commit(
         path, staging, partition_col,
@@ -218,7 +221,7 @@ def _acquire_merge_lock(target_dir: str, wait_s: float = 0.0) -> str:
 
     The rename-aside swap and the ``_key_manifest.json`` read-modify-write
     are crash-safe but assume ONE writer; two interleaved merges would
-    clobber each other's swaps and manifest ranges with no error. The
+    clobber each other's swaps and manifest key sets with no error. The
     protocol (atomic create-with-payload, dead-pid reclaim, the
     pid-recycling caveat) lives in :func:`util.acquire_dir_lock` —
     shared with the cursor state table's commit lock; a lock stuck on a
@@ -347,52 +350,41 @@ def read_partitioned(spark: SparkSession, path: str) -> DataFrame:
 def read_partitioned_for_key(
     spark: SparkSession, path: str, key: str, value
 ) -> DataFrame:
-    """Point-lookup read pruned by the KEY-RANGE MANIFEST: only
-    partition dirs whose ``[kmin, kmax]`` can contain ``value`` are
-    listed or opened — the read-side twin of the merge's moved-key probe
-    pruning. On a table whose key ranges are disjoint per partition (the
-    ingest's movies table: feed ids are year-scoped, and merge staging
-    writes are key-clustered) a point read opens exactly one partition
-    regardless of table size — the serving-path behavior a 100 TB CDC
-    table needs, without an index.
+    """Point-lookup read pruned by the KEY-SET MANIFEST: only partition
+    dirs whose key set holds ``value`` are listed or opened — the
+    read-side twin of the merge's moved-key probe pruning. The sets are
+    exact, so on a table with unique keys (the ingest's movies table) a
+    point read opens exactly the one partition holding the key,
+    regardless of table size or how the keys interleave across
+    partitions — the serving-path behavior a 100 TB CDC table needs,
+    without an index.
 
     Like :func:`read_partitioned`, the schema comes from the table's
     ``_table_schema.json`` record, so no schema-inference job runs.
-    Degrades to :func:`read_partitioned` (full listing) when the
-    manifest or the record is absent, or the manifest is kept for a
-    DIFFERENT key; unknown or type-incomparable ranges are
-    conservatively read. Zero candidates returns an empty frame of the
-    persisted schema. The usual retention caveat applies: rows outside
-    pruned partitions are invisible by construction, so callers must
-    pass the table's manifest key."""
-    sp = os.path.join(path, SCHEMA_NAME)
-    mp = os.path.join(path, km.MANIFEST_NAME)
+    Degrades to :func:`read_partitioned` (full listing) when the record
+    is absent or the manifest is absent, damaged or kept for a DIFFERENT
+    key; unknown sets or type-incomparable values are conservatively
+    read. Zero candidates returns an empty frame of the persisted
+    schema. The usual retention caveat applies: rows outside pruned
+    partitions are invisible by construction, so callers must pass the
+    table's manifest key."""
     try:
-        with open(mp) as fh:
-            doc = json.load(fh)
-        with open(sp) as fh:
+        with open(os.path.join(path, SCHEMA_NAME)) as fh:
             rec = json.load(fh)
-        if not (isinstance(doc, dict) and doc.get("key") == key):
-            return read_partitioned(spark, path)
         pcol = rec["partition_col"]
         schema = StructType.fromJson(rec["schema"])
     except (OSError, ValueError, KeyError, TypeError):
         return read_partitioned(spark, path)
-    manifest = km.load(path, key, pcol)
-    cand = []
-    for p, rng in manifest.items():
-        if rng is None:
-            cand.append(p)
-            continue
-        try:
-            if not (value < rng[0] or rng[1] < value):
-                cand.append(p)
-        except TypeError:
-            cand.append(p)
+    entries = km.stored(path, key, pcol)
+    if entries is None:
+        return read_partitioned(spark, path)
+    cand = km.candidates(
+        km.reconcile(path, key, pcol, entries), set(), [(value, value)]
+    )
     if not cand:
         return spark.createDataFrame([], schema)
     return spark.read.schema(schema).option("basePath", path).parquet(
-        *[os.path.join(path, p) for p in sorted(cand)]
+        *[os.path.join(path, p) for p in cand]
     )
 
 
@@ -452,7 +444,7 @@ def _replay_swap_journal(target_dir: str) -> None:
     - Journal present → staging committed: apply the plan FORWARD, in
       journal order.
       1. Pre-swap manifest: a keyed plan saves the current manifest
-         with each install op's ``post`` range unioned in (a superset is
+         with each install op's ``post`` key set unioned in (a superset is
          always safe — a crash anywhere in the swaps leaves the manifest
          over-inclusive, never wrong); ``{"drop": true}`` unlinks it.
       2. Swaps: install ops whose staged dir is still in staging run
@@ -499,7 +491,7 @@ def _replay_swap_journal(target_dir: str) -> None:
         for n, kind in ops:
             if kind == "install":
                 pre[n] = (
-                    km.union_range(pre[n], post.get(n))
+                    km.union_keys(pre[n], post.get(n))
                     if n in pre else post.get(n)
                 )
         km.save(target_dir, key, partition_col, pre)
@@ -655,7 +647,7 @@ def merge_into_partitioned(
 
     ``detect_moved_keys`` (default on) probes the non-touched partitions
     for source keys whose partition value changed (module docstring):
-    manifest range pruning → path-restricted read → row-group range
+    manifest key-set pruning → path-restricted read → row-group range
     predicate → one broadcast-LEFT-SEMI job. Old partitions holding a
     moved key are merged (and rewritten) too, so the key's stale row is
     relocated, not duplicated — a moved key classifies as ``update``,
@@ -677,6 +669,62 @@ def merge_into_partitioned(
         # ownership-verified release: never unlinks a lock another writer
         # re-installed after ours was externally removed (ADVICE r5)
         release_dir_lock(lock)
+
+
+def _read_target(
+    spark: SparkSession, target_dir: str, partition_col: str,
+    touched: Sequence, source_schema: StructType,
+) -> DataFrame:
+    """The merge's target frame: the rows of the ``touched`` partitions.
+
+    With a schema record and every touched partition's predicted dir on
+    disk, the dirs are read by PATH with the stored schema, like the
+    moved-key probe: no schema-inference job and no listing of untouched
+    partitions. Otherwise (a partition the batch creates, a table from a
+    pre-record writer, or a rendering divergence that hides the real dir
+    under another name) the whole table is read with inference and
+    filtered to ``touched`` — the read the divergence backstops in
+    :func:`_merge_locked` rely on."""
+    schema = _stored_schema(target_dir)
+    dirs = [
+        os.path.join(target_dir, _pdir_name(partition_col, v))
+        for v in touched
+    ]
+    if schema is not None and dirs and all(os.path.isdir(d) for d in dirs):
+        return spark.read.schema(schema).option(
+            "basePath", target_dir).parquet(*dirs)
+    try:
+        target = spark.read.parquet(target_dir)
+    except AnalysisException:
+        # The empty-table degrade below is ONLY for a table with no data:
+        # nothing was ever written, or a crash landed in the one window
+        # where the batch's only old partition was already deleted and
+        # the new one not yet installed (recovery finishes the delete,
+        # leaving zero visible partitions). AnalysisException also covers
+        # readable-but-broken tables (conflicting partition value types,
+        # incompatible schemas across partitions) — degrading THOSE would
+        # classify every source row as an insert and swap away the
+        # pre-existing rows of touched partitions. Distinguish by the
+        # directory listing: any surviving partition dir means real data,
+        # so re-raise loudly instead of silently dropping it.
+        if os.path.isdir(target_dir) and any(
+            km._is_part_dir(e.name, partition_col)
+            for e in os.scandir(target_dir)
+        ):
+            raise
+        os.makedirs(target_dir, exist_ok=True)
+        # An empty TABLE is not an absent one: a committed table whose
+        # every partition was emptied (or whose bootstrap batch was fully
+        # dead-lettered) still has its persisted schema record, and that
+        # schema can hold target-only columns the source lacks
+        # (created_at). Degrading to source.schema here would wedge the
+        # caller permanently: merge_into rejects a not_matched_insert
+        # naming a column the target "doesn't have", and every retry
+        # takes this same path (found by review — the ingest bootstrap +
+        # all-dead-lettered first page scenario). The schema record is
+        # exactly the read-back schema read_partitioned reads with.
+        target = spark.createDataFrame([], schema or source_schema)
+    return target.where(_touched_cond(touched, partition_col))
 
 
 def _merge_locked(
@@ -711,8 +759,8 @@ def _merge_locked(
     if detect_moved_keys and touched and spans:
         manifest = km.load(target_dir, keys[0], partition_col)
         touched_dirs = {_pdir_name(partition_col, v) for v in touched}
-        # manifest pruning: only partitions whose key range can intersect
-        # a batch span are read — by PATH, so excluded partitions are
+        # manifest pruning: only partitions holding a key inside a batch
+        # span are read — by PATH, so excluded partitions are
         # never even listed; when nothing intersects, no job runs at all
         probe_parts = km.candidates(manifest, touched_dirs, spans)
         if probe_parts:
@@ -744,40 +792,9 @@ def _merge_locked(
                 ).select(partition_col).distinct().collect()
             }
             touched += [v for v in moved if v not in touched]
-    try:
-        target = spark.read.parquet(target_dir)
-    except AnalysisException:
-        # The empty-table degrade below is ONLY for a table with no data:
-        # nothing was ever written, or a crash landed in the one window
-        # where the batch's only old partition was already deleted and
-        # the new one not yet installed (recovery finishes the delete,
-        # leaving zero visible partitions). AnalysisException also covers
-        # readable-but-broken tables (conflicting partition value types,
-        # incompatible schemas across partitions) — degrading THOSE would
-        # classify every source row as an insert and swap away the
-        # pre-existing rows of touched partitions. Distinguish by the
-        # directory listing: any surviving partition dir means real data,
-        # so re-raise loudly instead of silently dropping it.
-        if os.path.isdir(target_dir) and any(
-            km._is_part_dir(e.name, partition_col)
-            for e in os.scandir(target_dir)
-        ):
-            raise
-        os.makedirs(target_dir, exist_ok=True)
-        # An empty TABLE is not an absent one: a committed table whose
-        # every partition was emptied (or whose bootstrap batch was fully
-        # dead-lettered) still has its persisted schema record, and that
-        # schema can hold target-only columns the source lacks
-        # (created_at). Degrading to source.schema here would wedge the
-        # caller permanently: merge_into rejects a not_matched_insert
-        # naming a column the target "doesn't have", and every retry
-        # takes this same path (found by review — the ingest bootstrap +
-        # all-dead-lettered first page scenario). The schema record is
-        # exactly the read-back schema read_partitioned reads with.
-        target = spark.createDataFrame(
-            [], _stored_schema(target_dir) or source.schema
-        )
-    target = target.where(_touched_cond(touched, partition_col))
+    target = _read_target(
+        spark, target_dir, partition_col, touched, source.schema
+    )
     # Self-healing replay: a crash between two partition swaps of a
     # key-move batch can leave a key duplicated across partition dirs
     # (the new copy installed, the stale one not yet removed). Normalize
@@ -904,10 +921,10 @@ def _merge_locked(
         if manifest is None:
             manifest = km.load(target_dir, keys[0], partition_col)
         # exact post-swap manifest: swapped partitions take their staged
-        # footer ranges, emptied ones drop out
+        # key sets, emptied ones drop out
         post = {p: r for p, r in manifest.items() if p not in swap_names}
         post.update({
-            n: km.footer_range(os.path.join(staging, n), keys[0])
+            n: km.harvest_keys(os.path.join(staging, n), keys[0])
             for n in staged_names
         })
         manifest_plan = {"key": keys[0], "post": post}

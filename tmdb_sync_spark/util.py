@@ -256,7 +256,9 @@ def write_json_atomic(path: str, doc) -> None:
     leaves either the old file or the new one, never a torn one."""
     tmp = f"{path}.tmp.{os.getpid()}"
     with open(tmp, "w") as fh:
-        json.dump(doc, fh)
+        # one write: json.dump streams every list item as its own write,
+        # which dominates the cost of a key manifest's long key lists
+        fh.write(json.dumps(doc))
         fh.flush()
         os.fsync(fh.fileno())
     os.replace(tmp, path)
