@@ -1,4 +1,4 @@
-"""Cursor state-table commit semantics: atomic version publication,
+"""Cursor state commit semantics: atomic publication of the cursor file,
 serialized read-modify-write, and idempotent dead-letter replay (review
 findings on streaming/state.py + streaming/ingest.py)."""
 
@@ -25,18 +25,17 @@ def _cursor(key: str, page: int) -> dict:
 
 
 def test_commit_publishes_versions_atomically(spark, tmp_path):
-    """A crashed commit's staging dir (dot-prefixed) must be invisible to
-    readers and self-healed by the next commit; published version dirs
-    never contain Spark's _temporary scaffolding."""
+    """A crashed commit's leftover tmp file (``cursors.json.tmp.<pid>``)
+    must be invisible to readers and self-healed by the next commit,
+    which must succeed."""
     path = str(tmp_path / "cursors")
     os.makedirs(path)
-    # crashed-writer residue: staging dir for v000000 left mid-write
-    os.makedirs(os.path.join(path, ".v000000.tmp"))
-    assert st.latest_version(path) is None          # invisible to readers
+    # crashed-writer residue: a half-written tmp file of a dead writer
+    with open(os.path.join(path, st.CURSORS_FILE + ".tmp.99999"), "w") as fh:
+        fh.write('{"k": {"key": "k", "pa')
+    assert st.read_cursor(spark, path, "k")["page"] == 0   # invisible
     st.write_cursor(spark, path, _cursor("k", 1))
-    v = st.latest_version(path)
-    assert os.path.basename(v) == "v000000"          # residue was reused
-    assert "_temporary" not in os.listdir(v)
+    assert sorted(os.listdir(path)) == [st.CURSORS_FILE]   # residue swept
     assert st.read_cursor(spark, path, "k")["page"] == 1
 
 
@@ -117,16 +116,14 @@ def test_readers_never_see_a_partial_commit(spark, tmp_path):
 
 
 def test_version_retention_bounds_disk_and_listing(spark, tmp_path):
-    """A long-lived sync commits a cursor per batch; without retention
-    the state dir accumulates one version dir per commit forever.
-    Retention keeps the newest STATE_RETAIN and only ever deletes below
-    them, so the latest version (and the page-monotonic contract) is
-    untouched."""
+    """A long-lived sync commits a cursor per batch; the state dir must
+    not grow with the commit count. After 2*8 commits it holds one
+    cursor file (plus the lock while a commit holds it), and the latest
+    page is correct."""
     path = str(tmp_path / "cursors")
-    for page in range(1, 2 * st.STATE_RETAIN + 1):
+    n = 2 * 8
+    for page in range(1, n + 1):
         st.write_cursor(spark, path, _cursor("k", page))
-    import os as _os
-
-    vs = sorted(d for d in _os.listdir(path) if d.startswith("v"))
-    assert len(vs) == st.STATE_RETAIN
-    assert st.read_cursor(spark, path, "k")["page"] == 2 * st.STATE_RETAIN
+    left = [f for f in os.listdir(path) if f != st.STATE_LOCK_NAME]
+    assert left == [st.CURSORS_FILE]
+    assert st.read_cursor(spark, path, "k")["page"] == n

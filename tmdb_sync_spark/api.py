@@ -69,6 +69,8 @@ import re
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from tmdb_sync_spark.util import literal_rows
+
 # The endpoints' sort whitelists (movies.py:31-34 ∪ catalog.py:38):
 # "year" resolves through the ingest's materialized year column.
 SORT_FIELDS = (
@@ -94,21 +96,6 @@ def _validate(name: str, value, allowed) -> None:
         raise ValueError(
             f"search_movies: {name}={value!r} not in {tuple(allowed)}"
         )
-
-
-def _literal_row(spark, ddl: str, values) -> DataFrame:
-    """One row of ``values`` cast to the ``ddl`` schema, as literals over a
-    one-partition range. ``createDataFrame`` over a Python list would ship
-    the row as a pickled RDD, and every job that scans it (a moderation
-    MERGE scans its source twice) paid ~0.3 s more for it on a 4-vCPU
-    host."""
-    from pyspark.sql.types import StructType
-
-    fields = StructType.fromDDL(ddl).fields
-    return spark.range(1, numPartitions=1).select(*[
-        F.lit(v).cast(f.dataType).alias(f.name)
-        for f, v in zip(fields, values)
-    ])
 
 
 def _projection(movies: DataFrame) -> list[str]:
@@ -234,11 +221,6 @@ def years_status(
             year, content_type))
 
     state = read_state(spark, cursors_path)
-    if state is None:
-        state = spark.createDataFrame(
-            [], "key STRING, page INT, inserted BIGINT, updated BIGINT, "
-                "ts TIMESTAMP",
-        )
     mine = state.where(
         F.col("key").rlike(f"^years:{content_type}:[0-9]+$")
     ).select(
@@ -369,29 +351,22 @@ def sync_status(spark, state_dir: str) -> dict:
     import datetime as _dt
     import os as _os
 
-    from tmdb_sync_spark.streaming.state import read_state
+    from tmdb_sync_spark.streaming.state import read_cursors
 
     now = _dt.datetime.now(_dt.timezone.utc).replace(tzinfo=None)
-    state = read_state(spark, f"{state_dir}/cursors")
-    top_votes = None
-    years: list[dict] = []
-    if state is not None:
-        rows = state.collect()          # bounded: one row per cursor key
-        for r in rows:
-            d = r.asDict()
-            if d["key"] == "top_vote_count_movie":
-                top_votes = d
-        years = [
-            {"key": r["key"],
-             "content_type": r["key"].split(":", 2)[1],
-             "year": int(r["key"].split(":", 2)[2]),
-             "page": r["page"], "inserted": r["inserted"],
-             "updated": r["updated"], "ts": r["ts"]}
-            for r in rows
-            # the endpoint's try/except around split+int, as a regex
-            if re.match(r"^years:[^:]+:\d+$", r["key"] or "")
-        ]
-        years.sort(key=lambda x: (x["content_type"], x["year"]))
+    cursors = read_cursors(f"{state_dir}/cursors")
+    top_votes = cursors.get("top_vote_count_movie")
+    years = [
+        {"key": r["key"],
+         "content_type": r["key"].split(":", 2)[1],
+         "year": int(r["key"].split(":", 2)[2]),
+         "page": r["page"], "inserted": r["inserted"],
+         "updated": r["updated"], "ts": r["ts"]}
+        for r in cursors.values()
+        # the endpoint's try/except around split+int, as a regex
+        if re.match(r"^years:[^:]+:\d+$", r["key"])
+    ]
+    years.sort(key=lambda x: (x["content_type"], x["year"]))
 
     from tmdb_sync_spark.streaming.ingest import (
         ERROR_SCHEMA,
@@ -455,11 +430,11 @@ def report_frame(
     _validate("content_type", content_type, CONTENT_TYPES)
     if len(reason) > 200:                      # the endpoint's max_length
         raise ValueError("report_frame: reason longer than 200 chars")
-    _literal_row(
+    literal_rows(
         spark,
         "movie_id BIGINT, path STRING, reason STRING, content_type STRING, "
         "reporter STRING",
-        (int(movie_id), path, reason, content_type, reporter),
+        [(int(movie_id), path, reason, content_type, reporter)],
     ).withColumn("ts", F.current_timestamp()).to(
         StructType.fromDDL(REPORT_SCHEMA)
     ).write.mode("append").parquet(reports_path)
@@ -511,9 +486,9 @@ def _moderate_frames(
         raise ValueError("frames moderation: paths must be non-empty "
                          "(the endpoint requires min_items=1)")
     row = _movie_row(spark, movies_path, movie_id, content_type)
-    src = _literal_row(
+    src = literal_rows(
         spark, "id BIGINT, content_type STRING, year INT",
-        (int(movie_id), content_type, row["year"]),
+        [(int(movie_id), content_type, row["year"])],
     )
     lit_paths = F.array(*[F.lit(p) for p in paths])
     if add:

@@ -224,7 +224,7 @@ def _acquire_merge_lock(target_dir: str, wait_s: float = 0.0) -> str:
     clobber each other's swaps and manifest key sets with no error. The
     protocol (atomic create-with-payload, dead-pid reclaim, the
     pid-recycling caveat) lives in :func:`util.acquire_dir_lock` —
-    shared with the cursor state table's commit lock; a lock stuck on a
+    shared with the sync cursor file's commit lock; a lock stuck on a
     recycled pid is broken with :func:`break_merge_lock` after human
     verification.
 

@@ -157,7 +157,7 @@ def st4_a8_cursor_errors(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``sync_errors`` semantics, ``app/mongo.py:11``).
     """
     d = scenario_dir(spark)
-    # filter to THIS job's cursor row: the state table is multi-key by
+    # filter to THIS job's cursor row: the cursor file is multi-key by
     # design (the reference has a second years:{type}:{year} cursor
     # family), and an unfiltered read would explode the crossJoins below
     # one row per key

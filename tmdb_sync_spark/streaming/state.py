@@ -4,137 +4,108 @@ The reference keeps one cursor document per job in ``sync_cursors``
 (``app/sync_top.py:22-29,267-273``, ``app/sync_years.py:23-31,259-267``):
 ``{key, page, inserted, updated, ts}``, committed after every page.
 
-Spark-first shape: a tiny keyed state table. Parquet has no in-place
-upsert, so commits write a new **version directory** (``cursors/v000017``)
-and readers take the highest version — a poor man's table format giving
-atomic replace + monotonic history on any filesystem. On a real deployment
-this table is Delta/Iceberg and the commit is ``MERGE``; the call sites
-would not change.
+Here all of a state dir's cursors live in ONE small JSON file,
+``{path}/cursors.json``: a map from key to row, with ``ts`` as naive-UTC
+ISO text. A commit is a read-modify-write under ``{path}/_state.lock``
+published with :func:`util.write_json_atomic` (fsynced tmp file,
+``os.replace``, dir fsync), the same commit step the partitioned
+tables' journal, key manifest and schema record use. A reader sees the
+old file or the new one, never a torn one, and neither side starts a
+Spark job: a cursor is bookkeeping, not data to scan. Only
+:func:`read_state` builds a Spark frame, for the callers that join or
+filter the cursors in a plan.
+
+A state dir from the older parquet version-dir layout (``v000017``)
+holds no ``cursors.json``, so it reads as "no cursor". The job restarts
+at page 0 and its cumulative ``inserted``/``updated`` counters restart
+from 0; the replayed pages spend the run's item ``limit`` again, and
+rows already stored count as updated. The stored data is unchanged by
+the replay: dead letters are keyed by page and the movies MERGE
+upserts.
 """
 
 from __future__ import annotations
 
+import json
 import os
-import re
-import shutil
+from datetime import datetime
 
 from pyspark.sql import DataFrame, SparkSession
 
 from tmdb_sync_spark.util import (
     acquire_dir_lock,
-    fsync_dir,
-    fsync_tree,
+    literal_rows,
     release_dir_lock,
+    write_json_atomic,
 )
 
 CURSOR_SCHEMA = (
     "key STRING, page INT, inserted BIGINT, updated BIGINT, ts TIMESTAMP"
 )
-_V_RE = re.compile(r"^v(\d{6})$")
+CURSORS_FILE = "cursors.json"
 STATE_LOCK_NAME = "_state.lock"
 
 
-def latest_version(path: str) -> str | None:
-    if not os.path.isdir(path):
-        return None
-    vs = sorted(d for d in os.listdir(path) if _V_RE.match(d))
-    return os.path.join(path, vs[-1]) if vs else None
+def _load(path: str) -> dict:
+    """The stored doc: key → row, ``ts`` still ISO text (``{}`` when the
+    dir or the file does not exist)."""
+    try:
+        with open(os.path.join(path, CURSORS_FILE)) as fh:
+            return json.load(fh)
+    except FileNotFoundError:
+        return {}
 
 
-def next_version(path: str) -> str:
-    cur = latest_version(path)
-    n = int(_V_RE.match(os.path.basename(cur)).group(1)) + 1 if cur else 0
-    return os.path.join(path, f"v{n:06d}")
+def read_cursors(path: str) -> dict[str, dict]:
+    """Every committed cursor of the state dir, key → row dict."""
+    out = {}
+    for key, row in _load(path).items():
+        ts = row["ts"]
+        out[key] = {**row, "ts": datetime.fromisoformat(ts) if ts else None}
+    return out
 
 
-def commit(df: DataFrame, path: str) -> str:
-    """Write ``df`` as the next version of the state table at ``path``.
-
-    The version directory must appear ATOMICALLY: readers pick the
-    highest ``v%06d`` from a bare listing the instant it exists, and
-    ``status()`` explicitly advertises polling the cursor table mid-run.
-    Writing into the final name directly exposes a window where the dir
-    holds only ``_temporary`` (reader raises ``Unable to infer schema``)
-    or a partial file set (reader silently sees the page-0 default) —
-    so write to a dot-prefixed staging dir (invisible to
-    ``latest_version``'s regex) and ``os.rename`` it into place.
-    """
-    target = next_version(path)
-    staging = os.path.join(
-        os.path.dirname(target), "." + os.path.basename(target) + ".tmp"
-    )
-    df.write.mode("overwrite").parquet(staging)
-    # content first, THEN the publishing rename: a power loss that keeps
-    # the rename but loses the staged pages would point latest_version at
-    # an unreadable cursor (review finding — fsync_dir alone only makes
-    # the POINTER durable)
-    fsync_tree(staging)
-    os.rename(staging, target)
-    # version publication IS the commit — make the rename power-loss
-    # durable (util.fsync_dir), not merely process-crash safe
-    fsync_dir(path)
-    _retain_versions(path)
-    return target
-
-
-# Versions kept per state table. Without retention a long-lived sync
-# accumulates one dir per cursor commit FOREVER — unbounded disk and a
-# listdir that slows every read (the scale failure Delta's VACUUM
-# exists for). K=8 gives concurrent pollers an 8-commit grace window:
-# a reader that resolved latest_version() keeps a readable snapshot
-# unless it lags 8 further commits before opening it (sub-second
-# commits → a practically unreachable lag, and the same class of
-# retention race every table format documents).
-STATE_RETAIN = 8
-
-
-def _retain_versions(path: str) -> None:
-    """Delete all but the newest ``STATE_RETAIN`` versions. Runs under
-    the caller's commit lock; only ever removes versions BELOW the
-    retained set, so ``latest_version`` (highest wins) never sees a
-    partially-deleted dir even if a crash interrupts the sweep."""
-    vs = sorted(d for d in os.listdir(path) if _V_RE.match(d))
-    for d in vs[:-STATE_RETAIN]:
-        shutil.rmtree(os.path.join(path, d), ignore_errors=True)
-
-
-def read_state(spark: SparkSession, path: str) -> DataFrame | None:
-    cur = latest_version(path)
-    return spark.read.parquet(cur) if cur else None
+def read_state(spark: SparkSession, path: str) -> DataFrame:
+    """The cursors as a ``CURSOR_SCHEMA`` frame of literal rows (zero rows
+    for a missing or empty dir), for callers that use them in a plan."""
+    return literal_rows(spark, CURSOR_SCHEMA, [
+        (r["key"], r["page"], r["inserted"], r["updated"], r["ts"])
+        for r in read_cursors(path).values()
+    ])
 
 
 def read_cursor(spark: SparkSession, path: str, key: str) -> dict:
     """ST1: cursor fetch with the reference's page-0 default
     (``app/sync_top.py:22-25``)."""
-    df = read_state(spark, path)
-    if df is not None:
-        rows = df.where(df.key == key).collect()
-        if rows:
-            return rows[0].asDict()
-    return {"key": key, "page": 0, "inserted": 0, "updated": 0, "ts": None}
+    return read_cursors(path).get(
+        key, {"key": key, "page": 0, "inserted": 0, "updated": 0,
+              "ts": None})
 
 
 def write_cursor(spark: SparkSession, path: str, cursor: dict) -> None:
-    """ST1: commit the cursor row (merge-by-key into the state table).
+    """ST1: commit the cursor row (replace this key's row in the doc).
 
-    The read-modify-write (read latest version → replace this key's row →
-    commit next version) runs under the state dir's lock: two concurrent
-    jobs committing different keys would otherwise both compute the same
-    next version and the later overwrite would silently discard the
-    earlier job's committed page. Commits are sub-second, so contenders
-    WAIT (bounded) instead of failing — a cursor commit losing to a
-    transient overlap should not abort a whole sync run.
+    The read-modify-write runs under the state dir's lock: two
+    concurrent jobs committing different keys would otherwise both load
+    the same doc and the later publish would silently discard the
+    earlier job's committed page. Commits take milliseconds, so
+    contenders WAIT (bounded) instead of failing — a cursor commit
+    losing to a transient overlap should not abort a whole sync run.
     """
+    ts = cursor["ts"]
+    row = {"key": cursor["key"], "page": int(cursor["page"]),
+           "inserted": int(cursor["inserted"]),
+           "updated": int(cursor["updated"]),
+           "ts": ts.isoformat() if ts else None}
     lock = acquire_dir_lock(path, STATE_LOCK_NAME, wait_s=60.0)
     try:
-        prior = read_state(spark, path)
-        row = spark.createDataFrame(
-            [(cursor["key"], cursor["page"], cursor["inserted"],
-              cursor["updated"], cursor["ts"])],
-            CURSOR_SCHEMA,
-        )
-        if prior is not None:
-            row = prior.where(prior.key != cursor["key"]).unionByName(row)
-        commit(row, path)
+        # only the lock holder writes here: a tmp file left now is a
+        # crashed writer's, never a live one's
+        for name in os.listdir(path):
+            if name.startswith(CURSORS_FILE + ".tmp."):
+                os.unlink(os.path.join(path, name))
+        doc = _load(path)
+        doc[row["key"]] = row
+        write_json_atomic(os.path.join(path, CURSORS_FILE), doc)
     finally:
         release_dir_lock(lock)

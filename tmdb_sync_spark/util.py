@@ -265,6 +265,27 @@ def write_json_atomic(path: str, doc) -> None:
     fsync_dir(os.path.dirname(path) or ".")
 
 
+def literal_rows(spark, ddl: str, rows) -> DataFrame:
+    """``rows`` (tuples in ``ddl`` column order) cast to the ``ddl``
+    schema, as one inlined array of literal structs over a one-partition
+    range: zero rows for an empty list, and the ``ddl`` schema (nullable
+    columns) for every row count. ``createDataFrame`` over a Python list
+    would ship the rows as a pickled RDD, and every job that scans it (a
+    moderation MERGE scans its source twice) paid ~0.3 s more for it on
+    a 4-vCPU host."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import ArrayType, StructType
+
+    schema = StructType.fromDDL(ddl)
+    return spark.range(1, numPartitions=1).select(F.inline(
+        F.array(*[
+            F.struct(*[F.lit(v).cast(f.dataType).alias(f.name)
+                       for f, v in zip(schema.fields, r)])
+            for r in rows
+        ]).cast(ArrayType(schema))
+    ))
+
+
 def fsync_tree(root: str) -> None:
     """fsync every regular file and directory under ``root`` (and ``root``
     itself) — the content half of a power-loss-durable commit.
