@@ -1127,6 +1127,39 @@ def test_crash_after_journal_recovers_same_side_files_as_clean_run(
     )
 
 
+@pytest.mark.parametrize("kind", ["merge", "overwrite"])
+def test_next_commit_sweeps_crashed_publish_tmp_files(spark, kind):
+    """A writer that died inside ``write_json_atomic`` leaves its
+    ``<record>.tmp.<pid>`` beside the table's records; the next commit
+    deletes those files and commits the same rows as a clean run. A
+    lock contender's tmp file is not such a record, and stays."""
+    from tmdb_sync_spark.plans import manifest as km
+    from tmdb_sync_spark.plans.partitioned import (
+        MERGE_LOCK_NAME,
+        SWAP_JOURNAL_NAME,
+    )
+
+    d = tempfile.mkdtemp(prefix="pm_tmp_")
+    clean, crashed = f"{d}/clean", f"{d}/crashed"
+    for t in (clean, crashed):
+        _keyed_base(spark, t)
+    _run_commit(spark, clean, kind)
+    strays = [f"{n}.tmp.99999" for n in (km.MANIFEST_NAME, SWAP_JOURNAL_NAME)]
+    contender = f"{MERGE_LOCK_NAME}.tmp.99999.1"
+    for name in strays + [contender]:
+        with open(os.path.join(crashed, name), "w") as fh:
+            fh.write('{"torn')
+    _run_commit(spark, crashed, kind)
+    left = set(os.listdir(crashed))
+    assert not left & set(strays)
+    assert contender in left
+    assert _side_files(crashed) == _side_files(clean)
+    rows = sorted(tuple(r) for r in spark.read.parquet(crashed).collect())
+    assert rows == sorted(
+        tuple(r) for r in spark.read.parquet(clean).collect()
+    )
+
+
 @pytest.mark.parametrize("path", ["writer", "recovery"])
 @pytest.mark.parametrize("kind", ["merge", "overwrite"])
 def test_manifest_at_first_swap_covers_old_and_staged_ranges(

@@ -159,3 +159,111 @@ def test_merge_without_schema_record_infers_and_matches(
     assert _moderate(spark, without) == _moderate(spark, with_rec)
     # the inferred read runs its schema-inference job; the path read none
     assert jobs[0] > 0 and jobs[1] == 0
+
+
+def _parquet_files(path: str) -> dict:
+    return {
+        d: sorted(f for f in os.listdir(os.path.join(path, d))
+                  if f.endswith(".parquet"))
+        for d in sorted(os.listdir(path)) if d.startswith("y=")
+    }
+
+
+def test_full_write_lands_one_file_per_partition_dir(spark, tmp_path):
+    from tmdb_sync_spark.plans import manifest as km
+
+    path = str(tmp_path / "t")
+    rows = [(k, k % 5, f"v{k}") for k in range(200)]
+    # every input task holds rows of every partition value
+    df = spark.createDataFrame(rows, "k BIGINT, y INT, v STRING")
+    df = df.repartition(8)
+    assert df.rdd.getNumPartitions() == 8
+    write_partitioned(df, path, "y", cluster_by=("k",), manifest_key="k")
+
+    files = _parquet_files(path)
+    assert sorted(files) == [f"y={y}" for y in range(5)]
+    assert all(len(fs) == 1 for fs in files.values()), files
+    assert sorted(
+        tuple(r) for r in read_partitioned(spark, path).collect()
+    ) == sorted((k, v, y) for k, y, v in rows)
+    with open(os.path.join(path, km.MANIFEST_NAME)) as fh:
+        parts = json.load(fh)["parts"]
+    assert parts == {
+        f"y={y}": [k for k in range(200) if k % 5 == y] for y in range(5)
+    }
+
+
+def test_one_row_merge_leaves_one_file_in_a_multi_file_dir(spark, tmp_path):
+    from pyspark.sql import functions as F
+
+    path = str(tmp_path / "t")
+    rows = [(k, k % 3, f"v{k}") for k in range(60)]
+    # a table written without write_partitioned: several files per dir
+    spark.createDataFrame(rows, "k BIGINT, y INT, v STRING").repartition(
+        3
+    ).write.partitionBy("y").parquet(path)
+    assert len(_parquet_files(path)["y=1"]) > 1
+
+    src = spark.createDataFrame([(4, 1, "new")], "k BIGINT, y INT, v STRING")
+    merge_into_partitioned(
+        spark, path, src, ["k"], "y",
+        matched_update={"v": F.col("s.v")},
+    )
+    files = _parquet_files(path)
+    assert len(files["y=1"]) == 1
+    # untouched dirs keep their files
+    assert len(files["y=0"]) > 1 and len(files["y=2"]) > 1
+    want = sorted((k, "new" if k == 4 else v, y) for k, y, v in rows)
+    assert sorted(
+        tuple(r) for r in read_partitioned(spark, path).collect()
+    ) == want
+
+
+def test_meta_sync_status_sorts_in_one_task(spark, tmp_path):
+    from datetime import datetime
+
+    from pyspark.sql import functions as F
+
+    from tmdb_sync_spark.api import meta_sync_status
+
+    path = str(tmp_path / "movies")
+    ts = datetime(2024, 5, 1, 12, 0)
+    rows = [
+        (i, "movie" if i % 4 else "tv", None if i % 11 == 0 else 1990 + i % 7,
+         ts if i % 2 else None, ts if i % 3 == 0 else None)
+        for i in range(1, 120)
+    ]
+    write_partitioned(
+        spark.createDataFrame(rows, (
+            "id BIGINT, content_type STRING, year INT, "
+            "last_popularity_sync_at TIMESTAMP, "
+            "last_vote_count_sync_at TIMESTAMP"
+        )).repartition(4),
+        path, "year", cluster_by=("id",),
+    )
+    movies = read_partitioned(spark, path)
+
+    # the expression before the one-task sort: a global orderBy
+    total = F.count(F.lit(1))
+    with_pop = F.count(F.col("last_popularity_sync_at"))
+    with_vc = F.count(F.col("last_vote_count_sync_at"))
+    want = (
+        movies.where(F.col("content_type") == "movie")
+        .groupBy("year")
+        .agg(
+            total.alias("total"),
+            F.max("last_popularity_sync_at").alias("last_popularity"),
+            F.max("last_vote_count_sync_at").alias("last_vote_count"),
+            (with_pop / total).alias("popularity_coverage"),
+            (with_vc / total).alias("vote_count_coverage"),
+        )
+        .orderBy("year")
+        .collect()
+    )
+    assert want[0]["year"] is None and len(want) == 8
+
+    got, jobs = _jobs_while(
+        spark, lambda: meta_sync_status(movies).collect()
+    )
+    assert got == want
+    assert len(jobs) <= 2, jobs

@@ -269,7 +269,9 @@ def meta_sync_status(
     stamps the jobs maintain per sort kind), and the fraction of the
     year's rows carrying each stamp. One filtered scan → one hash
     aggregate → sort; the coverage ratios are single double divisions of
-    exact counts."""
+    exact counts. The result holds at most one row per year, so it is
+    sorted in one task: a global ``orderBy`` would add a range-sampling
+    job and an exchange to every call."""
     _validate("content_type", content_type, CONTENT_TYPES)
     out = movies.where(F.col("content_type") == content_type)
     if year_from is not None:
@@ -288,7 +290,8 @@ def meta_sync_status(
             (with_pop / total).alias("popularity_coverage"),
             (with_vc / total).alias("vote_count_coverage"),
         )
-        .orderBy("year")
+        .coalesce(1)
+        .sortWithinPartitions("year")
     )
 
 

@@ -357,13 +357,7 @@ def _compact_locked(
     spark.catalog.refreshByPath(index_path)
     idx = spark.read.parquet(index_path)
     rows = idx.count()
-    # one task per bucket → exactly one output file per bucket; without
-    # this, every input task would write a sliver into every bucket —
-    # the very problem being compacted away
-    write_partitioned_locked(
-        idx.repartition("bb"), index_path, "bb",
-        cluster_by=(cluster_by,),
-    )
+    write_partitioned_locked(idx, index_path, "bb", cluster_by=(cluster_by,))
     after, _ = count_bucket_files(index_path, "bb=")
     return {"files_before": before, "files_after": after, "rows": rows}
 

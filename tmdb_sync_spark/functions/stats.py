@@ -793,7 +793,7 @@ def compact_profile_drops(spark: SparkSession, path: str) -> dict:
         "drop", F.lit(new_id)
     )
     _add_tombstoned_ids(path, old_ids)
-    write_partitioned(merged.repartition("drop"), path, "drop")
+    write_partitioned(merged, path, "drop")
     return {
         "compacted": True,
         "drops_before": len(old_ids),

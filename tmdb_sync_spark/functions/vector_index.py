@@ -163,10 +163,7 @@ def _compact_vec_locked(spark: SparkSession, index_path: str) -> dict:
     spark.catalog.refreshByPath(index_path)
     idx = spark.read.parquet(index_path)
     rows = idx.count()
-    write_partitioned_locked(
-        idx.repartition("bucket"), index_path, "bucket",
-        cluster_by=("vec_id",),
-    )
+    write_partitioned_locked(idx, index_path, "bucket", cluster_by=("vec_id",))
     after, _ = count_bucket_files(index_path, "bucket=")
     return {"files_before": before, "files_after": after, "rows": rows}
 

@@ -278,8 +278,6 @@ def _compact_fp_locked(spark: SparkSession, index_path: str) -> dict:
     spark.catalog.refreshByPath(index_path)
     idx = spark.read.parquet(index_path)
     rows = idx.count()
-    write_partitioned_locked(
-        idx.repartition("bb"), index_path, "bb", cluster_by=("fp",),
-    )
+    write_partitioned_locked(idx, index_path, "bb", cluster_by=("fp",))
     after, _ = count_bucket_files(index_path, "bb=")
     return {"files_before": before, "files_after": after, "rows": rows}

@@ -89,11 +89,17 @@ def write_partitioned(
     """Full overwrite of a hive-partitioned table: plan → journal →
     apply, the commit path every writer shares (module docstring).
 
-    ``cluster_by`` locally sorts each task's output so parquet row-group
-    key stats are tight from the first write (the same clustering the
-    merge's staging writes apply). ``manifest_key`` maintains the
-    per-partition key-set manifest so the first merge needn't harvest
-    it lazily; without it a stale manifest is dropped.
+    The rows are rebalanced on ``partition_col`` before the write, so
+    each partition dir holds one part file (one per advisory partition
+    size, ``spark.sql.adaptive.advisoryPartitionSizeInBytes``, for a dir
+    larger than that): a full scan opens one file per dir, however many
+    tasks produced ``df``. Callers need no ``repartition`` of their own.
+    ``cluster_by`` sorts each file by those columns after the partition
+    column, so parquet row-group key stats are tight from the first
+    write (the same clustering the merge's staging writes apply).
+    ``manifest_key`` maintains the per-partition key-set manifest so the
+    first merge needn't harvest it lazily; without it a stale manifest
+    is dropped.
 
     The new table is written to a staging dir first (a crash there
     leaves the live table untouched and the staging dir discardable).
@@ -147,9 +153,10 @@ def write_partitioned_locked(
     if if_not_exists and table_exists(path):
         return False
     staging = _staging_dir(path)
-    if cluster_by:
-        df = df.sortWithinPartitions(partition_col, *cluster_by)
-    df.write.partitionBy(partition_col).mode("overwrite").parquet(staging)
+    # one file per partition dir (docstring of write_partitioned)
+    df.hint("rebalance", partition_col).sortWithinPartitions(
+        partition_col, *cluster_by
+    ).write.partitionBy(partition_col).mode("overwrite").parquet(staging)
     staged_names = [
         e for e in sorted(os.listdir(staging))
         if km._is_part_dir(e, partition_col)
@@ -528,6 +535,14 @@ def _replay_swap_journal(target_dir: str) -> None:
         shutil.rmtree(staging, ignore_errors=True)
 
 
+# tmp-file prefixes of the records util.write_json_atomic publishes
+# into a table dir
+_PUBLISHED_TMP = tuple(
+    f"{name}.tmp."
+    for name in (SWAP_JOURNAL_NAME, km.MANIFEST_NAME, SCHEMA_NAME)
+)
+
+
 def _recover_leftovers(target_dir: str) -> None:
     """Restore dot-prefixed ``.{pdir}.old`` dirs left by an interrupted swap.
 
@@ -545,14 +560,21 @@ def _recover_leftovers(target_dir: str) -> None:
     (:func:`_replay_swap_journal`): the journal's replay uses the
     same swap primitive, and its own residue is exactly the dot-prefixed
     leftovers the generic pass below then finishes.
+
+    Also deletes the tmp files of a crashed :func:`util.write_json_atomic`
+    publish of the journal, manifest or schema record: every caller
+    holds ``_merge.lock``, so no live writer owns one.
     """
     if not os.path.isdir(target_dir):
         return
     _replay_swap_journal(target_dir)
     for entry in os.listdir(target_dir):
+        path = os.path.join(target_dir, entry)
+        if entry.startswith(_PUBLISHED_TMP):
+            os.unlink(path)
+            continue
         if not entry.startswith("."):
             continue
-        path = os.path.join(target_dir, entry)
         if entry.endswith(".del"):
             # an emptied-partition delete died mid-rmtree: the merge had
             # already decided these rows are gone — finish the delete,
