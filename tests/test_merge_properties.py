@@ -594,18 +594,24 @@ def test_garbled_overwrite_journal_raises_never_guesses(spark):
 
 def test_overwrite_drops_stale_manifest_when_unmaintained(spark):
     """An overwrite WITHOUT manifest_key must not leave a previous
-    merge's manifest describing rows that no longer exist — stale ranges
+    merge's key sets describing rows that no longer exist — stale sets
     would mis-prune the next merge's moved-key probe."""
-    from tmdb_sync_spark.plans import manifest as km
+    import json as _json
+
+    from tmdb_sync_spark.plans.partitioned import SCHEMA_NAME
+
+    def key_sets():
+        with open(os.path.join(target_dir, SCHEMA_NAME)) as fh:
+            return _json.load(fh).get("parts")
 
     d = tempfile.mkdtemp(prefix="ow_manifest_")
     target_dir = f"{d}/t"
     df1 = spark.createDataFrame([(1, 2000, 1.0)], "k BIGINT, y INT, p DOUBLE")
     write_partitioned(df1, target_dir, "y", manifest_key="k")
-    assert os.path.exists(os.path.join(target_dir, km.MANIFEST_NAME))
+    assert key_sets() is not None
     df2 = spark.createDataFrame([(9, 2001, 9.0)], "k BIGINT, y INT, p DOUBLE")
     write_partitioned(df2, target_dir, "y")          # unmaintained overwrite
-    assert not os.path.exists(os.path.join(target_dir, km.MANIFEST_NAME))
+    assert key_sets() is None
     # and the table is exactly the new data
     assert [(r.k, r.y) for r in spark.read.parquet(target_dir).collect()] \
         == [(9, 2001)]

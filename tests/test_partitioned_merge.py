@@ -409,15 +409,21 @@ def test_manifest_probe_reads_only_intersecting_partition(spark):
 
 
 def test_manifest_missing_rebuilds_from_footers(spark):
-    """Deleting the manifest (crash, external copy) degrades to a footer
-    harvest, never to a missed moved key."""
+    """A record without key sets (an older writer, an external copy)
+    degrades to a footer harvest, never to a missed moved key."""
+    import json as _json
     import tempfile
 
-    from tmdb_sync_spark.plans import manifest as km
+    from tmdb_sync_spark.plans.partitioned import SCHEMA_NAME
 
     d = tempfile.mkdtemp(prefix="pm_manifest3_")
     target = _banded_table(spark, d)
-    os.remove(os.path.join(target, km.MANIFEST_NAME))
+    rp = os.path.join(target, SCHEMA_NAME)
+    with open(rp) as fh:
+        rec = _json.load(fh)
+    with open(rp, "w") as fh:
+        _json.dump({"partition_col": rec["partition_col"],
+                    "schema": rec["schema"]}, fh)
     source = spark.createDataFrame(
         [(250, 2000, 1.5)], "k BIGINT, y INT, price DOUBLE"
     )
@@ -429,8 +435,9 @@ def test_manifest_missing_rebuilds_from_footers(spark):
     assert res["counts"] == {"update": 1, "noop": 199}
     rows = spark.read.parquet(target).where("k = 250").collect()
     assert len(rows) == 1 and rows[0]["y"] == 2000
-    # and the manifest was re-established for the next merge
-    assert os.path.exists(os.path.join(target, km.MANIFEST_NAME))
+    # and the key sets were re-established for the next merge
+    with open(rp) as fh:
+        assert "parts" in _json.load(fh)
 
 
 def test_replay_after_crash_emptied_last_partition(spark):
@@ -535,28 +542,36 @@ def test_merge_bootstraps_missing_table(spark):
 
 
 def test_manifest_corrupt_shapes_degrade_not_crash(spark):
-    """Valid JSON that is not a valid manifest (null, a list, a string,
-    a non-dict parts, an older-version range file) must degrade to a
-    re-harvest exactly like a parse failure — load()'s documented 'never
-    an error' contract."""
+    """A record whose key sets are not valid (null, a list, a string,
+    a non-dict parts, sets kept for another key or partition column, no
+    sets at all) must degrade to a re-harvest exactly like a parse
+    failure — load()'s documented 'never an error' contract."""
+    import json as _json
     import tempfile
 
     from tmdb_sync_spark.plans import manifest as km
+    from tmdb_sync_spark.plans.partitioned import (
+        SCHEMA_NAME,
+        _load_record,
+        _record_parts,
+    )
 
     d = tempfile.mkdtemp(prefix="pm_manifest4_")
     target = _banded_table(spark, d)
-    path = os.path.join(target, km.MANIFEST_NAME)
+    path = os.path.join(target, SCHEMA_NAME)
     truth = {f"y={y}": list(range(100 * (y - 2000), 100 * (y - 1999)))
              for y in (2000, 2001, 2002, 2003)}
-    head = '{"version": 2, "key": "k", "partition_col": "y", '
+    head = '{"key": "k", "partition_col": "y", '
     for garbage in ("null", "[]", '"x"', "7",
                     head + '"parts": []}',
                     "{not json",
-                    # a version-1 range manifest: re-harvested, never
-                    # read as a two-key set
-                    '{"version": 1, "key": "k", "partition_col": "y",'
-                    ' "parts": {"y=2000": [0, 99]}}',
-                    '{"key": "k", "partition_col": "y",'
+                    # a record of an older writer (no key sets) and sets
+                    # kept for another key or partition column: each is
+                    # re-harvested, never read as this key's sets
+                    '{"partition_col": "y", "schema": {}}',
+                    '{"key": "j", "partition_col": "y",'
+                    ' "parts": {"y=2000": [0, 1]}}',
+                    '{"key": "k", "partition_col": "x",'
                     ' "parts": {"y=2000": [0, 1]}}',
                     # parseable dicts with DAMAGED key sets: a wrong set
                     # silently mis-prunes the moved-key probe, so these
@@ -573,7 +588,8 @@ def test_manifest_corrupt_shapes_degrade_not_crash(spark):
         with open(path, "w") as fh:
             fh.write(garbage)
         # the harvested sets are the true keys, not the junk
-        assert km.load(target, "k", "y") == truth, garbage
+        parts = _record_parts(_load_record(target), "k", "y")
+        assert km.load(target, "k", "y", parts) == truth, garbage
 
 
 def test_boolean_partition_values_swap_correctly(spark):
@@ -1081,16 +1097,11 @@ def _run_commit(spark, target, kind):
 def _side_files(target):
     import json as _json
 
-    from tmdb_sync_spark.plans import manifest as km
     from tmdb_sync_spark.plans.partitioned import SCHEMA_NAME
 
-    mp = os.path.join(target, km.MANIFEST_NAME)
-    parts = None
-    if os.path.exists(mp):
-        with open(mp) as fh:
-            parts = _json.load(fh)["parts"]
+    # the one record: schema and, for a keyed table, the key sets
     with open(os.path.join(target, SCHEMA_NAME)) as fh:
-        return parts, _json.load(fh)
+        return _json.load(fh)
 
 
 @pytest.mark.parametrize("kind", _COMMIT_KINDS)
@@ -1098,8 +1109,8 @@ def test_crash_after_journal_recovers_same_side_files_as_clean_run(
     spark, monkeypatch, kind
 ):
     """A writer that dies right after its journal rename and is then
-    rolled forward by recovery leaves the same key manifest parts and
-    schema record as a clean run of the same write — the normal path
+    rolled forward by recovery leaves the same key sets and table
+    record as a clean run of the same write — the normal path
     and recovery apply one plan with one code path."""
     from tmdb_sync_spark.plans.partitioned import (
         SWAP_JOURNAL_NAME,
@@ -1128,14 +1139,60 @@ def test_crash_after_journal_recovers_same_side_files_as_clean_run(
 
 
 @pytest.mark.parametrize("kind", ["merge", "overwrite"])
+def test_older_writers_pending_journal_replays_same_rows(
+    spark, monkeypatch, kind
+):
+    """A journal in the older layout — a ``manifest`` plan beside a
+    ``schema_record`` without key sets — still replays: the swaps and
+    rows equal a clean run's, its ``manifest`` field is ignored, and the
+    published record is the journal's."""
+    import json as _json
+
+    from tmdb_sync_spark.plans.partitioned import (
+        SCHEMA_NAME,
+        SWAP_JOURNAL_NAME,
+        _recover_leftovers,
+    )
+
+    d = tempfile.mkdtemp(prefix="pm_joldfmt_")
+    clean, crashed = f"{d}/clean", f"{d}/crashed"
+    for t in (clean, crashed):
+        _keyed_base(spark, t)
+    _run_commit(spark, clean, kind)
+    _crash_after_journal(monkeypatch)
+    with pytest.raises(_CrashAfterJournal):
+        _run_commit(spark, crashed, kind)
+    jpath = os.path.join(crashed, SWAP_JOURNAL_NAME)
+    with open(jpath) as fh:
+        j = _json.load(fh)
+    rec = j["schema_record"]
+    with open(jpath, "w") as fh:
+        _json.dump({
+            "staging": j["staging"], "partition_col": "y", "ops": j["ops"],
+            "manifest": {"key": "k", "post": rec["parts"]},
+            "schema_record": {"partition_col": "y", "schema": rec["schema"]},
+        }, fh)
+    _recover_leftovers(crashed)
+    assert not os.path.exists(jpath)
+    with open(os.path.join(crashed, SCHEMA_NAME)) as fh:
+        assert _json.load(fh) == {"partition_col": "y",
+                                  "schema": rec["schema"]}
+    spark.catalog.refreshByPath(crashed)
+    rows = sorted(tuple(r) for r in spark.read.parquet(crashed).collect())
+    assert rows == sorted(
+        tuple(r) for r in spark.read.parquet(clean).collect()
+    )
+
+
+@pytest.mark.parametrize("kind", ["merge", "overwrite"])
 def test_next_commit_sweeps_crashed_publish_tmp_files(spark, kind):
     """A writer that died inside ``write_json_atomic`` leaves its
     ``<record>.tmp.<pid>`` beside the table's records; the next commit
     deletes those files and commits the same rows as a clean run. A
     lock contender's tmp file is not such a record, and stays."""
-    from tmdb_sync_spark.plans import manifest as km
     from tmdb_sync_spark.plans.partitioned import (
         MERGE_LOCK_NAME,
+        SCHEMA_NAME,
         SWAP_JOURNAL_NAME,
     )
 
@@ -1144,7 +1201,7 @@ def test_next_commit_sweeps_crashed_publish_tmp_files(spark, kind):
     for t in (clean, crashed):
         _keyed_base(spark, t)
     _run_commit(spark, clean, kind)
-    strays = [f"{n}.tmp.99999" for n in (km.MANIFEST_NAME, SWAP_JOURNAL_NAME)]
+    strays = [f"{n}.tmp.99999" for n in (SCHEMA_NAME, SWAP_JOURNAL_NAME)]
     contender = f"{MERGE_LOCK_NAME}.tmp.99999.1"
     for name in strays + [contender]:
         with open(os.path.join(crashed, name), "w") as fh:
@@ -1166,26 +1223,26 @@ def test_manifest_at_first_swap_covers_old_and_staged_ranges(
     spark, monkeypatch, kind, path
 ):
     """Pre-swap superset: when the first partition swap starts, the
-    manifest on disk must already cover, for every installed partition,
-    both its old key set and its staged one — a crash inside the swaps
-    then leaves the moved-key probe over-inclusive, never wrong. Holds
-    on the writer's own commit and on recovery's roll-forward alike."""
+    record's key sets on disk must already cover, for every installed
+    partition, both its old key set and its staged one — a crash inside
+    the swaps then leaves the moved-key probe over-inclusive, never
+    wrong. Holds on the writer's own commit and on recovery's
+    roll-forward alike."""
     import json as _json
 
     import tmdb_sync_spark.plans.partitioned as pp
-    from tmdb_sync_spark.plans import manifest as km
 
     d = tempfile.mkdtemp(prefix="pm_jpre_")
     target = f"{d}/t"
     _keyed_base(spark, target)
-    with open(os.path.join(target, km.MANIFEST_NAME)) as fh:
+    with open(os.path.join(target, pp.SCHEMA_NAME)) as fh:
         old = _json.load(fh)["parts"]
     seen: list = []
     real_swap = pp._swap_partition
 
     def recording_swap(target_dir, staging, pdir):
         if not seen:
-            with open(os.path.join(target_dir, km.MANIFEST_NAME)) as fh:
+            with open(os.path.join(target_dir, pp.SCHEMA_NAME)) as fh:
                 seen.append(_json.load(fh)["parts"])
             with open(os.path.join(target_dir, pp.SWAP_JOURNAL_NAME)) as fh:
                 seen.append(_json.load(fh)["ops"])
@@ -1200,7 +1257,7 @@ def test_manifest_at_first_swap_covers_old_and_staged_ranges(
         pp._recover_leftovers(target)
     else:
         _run_commit(spark, target, kind)
-    with open(os.path.join(target, km.MANIFEST_NAME)) as fh:
+    with open(os.path.join(target, pp.SCHEMA_NAME)) as fh:
         staged = _json.load(fh)["parts"]
     at_swap, ops = seen
     installs = [n for n, op in ops if op == "install"]

@@ -170,8 +170,6 @@ def _parquet_files(path: str) -> dict:
 
 
 def test_full_write_lands_one_file_per_partition_dir(spark, tmp_path):
-    from tmdb_sync_spark.plans import manifest as km
-
     path = str(tmp_path / "t")
     rows = [(k, k % 5, f"v{k}") for k in range(200)]
     # every input task holds rows of every partition value
@@ -186,7 +184,7 @@ def test_full_write_lands_one_file_per_partition_dir(spark, tmp_path):
     assert sorted(
         tuple(r) for r in read_partitioned(spark, path).collect()
     ) == sorted((k, v, y) for k, y, v in rows)
-    with open(os.path.join(path, km.MANIFEST_NAME)) as fh:
+    with open(os.path.join(path, SCHEMA_NAME)) as fh:
         parts = json.load(fh)["parts"]
     assert parts == {
         f"y={y}": [k for k in range(200) if k % 5 == y] for y in range(5)
@@ -267,3 +265,109 @@ def test_meta_sync_status_sorts_in_one_task(spark, tmp_path):
     )
     assert got == want
     assert len(jobs) <= 2, jobs
+
+
+def _record(path: str) -> dict:
+    with open(os.path.join(path, SCHEMA_NAME)) as fh:
+        return json.load(fh)
+
+
+def test_keyed_commits_keep_key_sets_in_the_one_record(spark, tmp_path):
+    from tmdb_sync_spark.plans import manifest as km
+
+    path = str(tmp_path / "t")
+
+    def assert_one_record():
+        pdirs = sorted(e for e in os.listdir(path) if e.startswith("y="))
+        assert sorted(os.listdir(path)) == [SCHEMA_NAME] + pdirs
+        rec = _record(path)
+        assert rec["key"] == "k" and rec["partition_col"] == "y"
+        assert rec["parts"] == {
+            d: km.harvest_keys(os.path.join(path, d), "k") for d in pdirs
+        }
+
+    _catalog_like_table(spark, path)
+    assert_one_record()
+    # moves top-feed key 13 from y=4 to y=7 and adds a new partition
+    src = spark.createDataFrame(
+        [(13, 7, "moved"), (110_001, 11, "new")], "k BIGINT, y INT, v STRING"
+    )
+    merge_into_partitioned(spark, path, src, ["k"], "y")
+    assert_one_record()
+    assert _record(path)["parts"]["y=11"] == [110_001]
+    assert 13 in _record(path)["parts"]["y=7"]
+
+
+def test_record_without_key_sets_reads_and_heals(spark, tmp_path):
+    """A table of an older writer: a record without key sets, beside a
+    stale ``_key_manifest.json`` that is never read. Point reads fall
+    back to the full read, and the next merge publishes exact sets."""
+    from tmdb_sync_spark.api import get_movie
+    from tmdb_sync_spark.plans import manifest as km
+
+    path = str(tmp_path / "movies")
+    rows = [(y * 100 + i, "movie", f"m{y}.{i}", y)
+            for y in (2001, 2002, 2003) for i in range(3)]
+    df = spark.createDataFrame(
+        rows, "id BIGINT, content_type STRING, title STRING, year INT")
+    write_partitioned(df, path, "year", manifest_key="id")
+    rec = _record(path)
+    with open(os.path.join(path, SCHEMA_NAME), "w") as fh:
+        json.dump({"partition_col": "year", "schema": rec["schema"]}, fh)
+    # the stale file claims the id lives in another partition
+    with open(os.path.join(path, "_key_manifest.json"), "w") as fh:
+        json.dump({"version": 2, "key": "id", "partition_col": "year",
+                   "parts": {"year=2001": [200_201], "year=2002": [],
+                             "year=2003": []}}, fh)
+
+    point = read_partitioned_for_key(spark, path, "id", 200_201)
+    assert len({os.path.dirname(f) for f in point.inputFiles()}) == 3
+    row = get_movie(point, 200_201)
+    assert row is not None and row["title"] == "m2002.1"
+    assert get_movie(read_partitioned_for_key(spark, path, "id", 7), 7) \
+        is None
+
+    src = spark.createDataFrame(
+        [(200_201, "movie", "renamed", 2002)],
+        "id BIGINT, content_type STRING, title STRING, year INT")
+    merge_into_partitioned(spark, path, src, ["id", "content_type"], "year")
+    pdirs = sorted(e for e in os.listdir(path) if e.startswith("year="))
+    assert _record(path)["parts"] == {
+        d: km.harvest_keys(os.path.join(path, d), "id") for d in pdirs
+    }
+    point = read_partitioned_for_key(spark, path, "id", 200_201)
+    assert [os.path.basename(os.path.dirname(f))
+            for f in point.inputFiles()] == ["year=2002"]
+    assert get_movie(point, 200_201)["title"] == "renamed"
+
+
+def test_damaged_record_degrades_like_a_missing_one(spark, tmp_path):
+    """A record that is not a JSON object: reads infer the schema, a
+    point read falls back to the full read, and the next merge
+    re-harvests the key sets into a whole record."""
+    from tmdb_sync_spark.plans import manifest as km
+
+    path = str(tmp_path / "t")
+    _catalog_like_table(spark, path)
+    want = sorted(tuple(r) for r in read_partitioned(spark, path).collect())
+    with open(os.path.join(path, SCHEMA_NAME), "w") as fh:
+        fh.write("{not json")
+    assert sorted(
+        tuple(r) for r in read_partitioned(spark, path).collect()
+    ) == want
+    point = read_partitioned_for_key(spark, path, "k", 13)
+    assert len({os.path.dirname(f) for f in point.inputFiles()}) == 10
+    assert [r["v"] for r in point.where("k = 13").collect()] == ["top13"]
+
+    src = spark.createDataFrame(
+        [(50_003, 5, "new")], "k BIGINT, y INT, v STRING"
+    )
+    merge_into_partitioned(spark, path, src, ["k"], "y")
+    pdirs = sorted(e for e in os.listdir(path) if e.startswith("y="))
+    assert _record(path)["parts"] == {
+        d: km.harvest_keys(os.path.join(path, d), "k") for d in pdirs
+    }
+    point = read_partitioned_for_key(spark, path, "k", 50_003)
+    assert [os.path.basename(os.path.dirname(f))
+            for f in point.inputFiles()] == ["y=5"]
+    assert [r["v"] for r in point.where("k = 50003").collect()] == ["new"]

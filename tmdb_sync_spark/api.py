@@ -445,10 +445,10 @@ def report_frame(
 
 
 def _movie_row(spark, movies_path: str, movie_id: int, content_type: str):
-    # manifest-pruned point read: the exact id sets send it to the one
-    # partition holding the id, regardless of table size (the
-    # serving-path requirement at scale); tables without an id manifest
-    # degrade to the full listing
+    # key-set-pruned point read: the table record's exact id sets send
+    # it to the one partition holding the id, regardless of table size
+    # (the serving-path requirement at scale); tables whose record holds
+    # no id sets degrade to the full listing
     from tmdb_sync_spark.plans.partitioned import read_partitioned_for_key
 
     rows = (
@@ -564,7 +564,7 @@ def get_movie(
     ``collect`` is bounded by the key's uniqueness (the MERGE maintains
     one row per (id, content_type)). Callers holding the TABLE PATH
     should pass ``read_partitioned_for_key(spark, path, "id", id)`` as
-    ``movies`` — the manifest-pruned point read that opens only the
+    ``movies`` — the key-set-pruned point read that opens only the
     partition holding the id, at any table size (plans.partitioned)."""
     _validate("content_type", content_type, CONTENT_TYPES)
     rows = (

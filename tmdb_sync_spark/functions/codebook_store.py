@@ -21,8 +21,8 @@ contracts:
   the caller retrains + saves — never serves neighbors from the old
   corpus's geometry.
 - **single-writer lock + atomic publish**: saves serialize under the
-  store's ``_merge.lock`` and publish by tmp-file + ``os.replace``, so
-  a reader never observes a torn artifact; each save increments a
+  store's ``_merge.lock`` and publish with ``util.write_json_atomic``,
+  so a reader never observes a torn artifact; each save increments a
   ``version`` counter (the artifact is versioned, not overwritten
   blindly — an operator can see a retrain happened).
 
@@ -74,7 +74,11 @@ def save_codebook(
     """Persist a trained codebook (the ``Row(vec_id, v, nrm)`` list
     ``_train_codebook`` returns) stamped with its source table's content
     fingerprint. Returns the artifact version written."""
-    from tmdb_sync_spark.util import check_store_contract, release_dir_lock
+    from tmdb_sync_spark.util import (
+        check_store_contract,
+        release_dir_lock,
+        write_json_atomic,
+    )
 
     check_store_contract(store_path, _contract(), "save_codebook")
     lock = _writer_lock(store_path, lock_wait_s)
@@ -96,12 +100,7 @@ def save_codebook(
                 for c in cents
             ],
         }
-        tmp = f"{f}.tmp.{os.getpid()}"
-        with open(tmp, "w") as fh:
-            json.dump(doc, fh)
-            fh.flush()
-            os.fsync(fh.fileno())
-        os.replace(tmp, f)
+        write_json_atomic(f, doc)
         return version
     finally:
         release_dir_lock(lock)

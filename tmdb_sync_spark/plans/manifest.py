@@ -4,44 +4,41 @@ The moved-key probe in ``plans.partitioned`` must answer: *which other
 partitions could hold a key from this batch?* — and a point read: *which
 partition holds this key?* Min/max key ranges cannot answer either when
 keys interleave across partitions (the movies table's top-feed ids
-1..2743 widen the range of every partition from 1950 on), so this module
-keeps exact metadata apart from the data: a driver-side manifest
-(``_key_manifest.json`` inside the table dir — underscore-prefixed, so
-Spark's file listing skips it) mapping each partition directory to the
-SORTED list of the distinct non-null values of its merge-key column.
-A list is harvested by reading only the key column of the partition's
-parquet files with pyarrow on the driver (no Spark job) and is kept
-current by every writer's commit. A partition is a candidate only when
-its list holds a value inside one of the batch's per-partition key spans
-(``bisect``): a point read opens exactly the partition holding the key,
-and when no other partition holds a batch-span key the probe job is
-skipped entirely. NULL keys are never listed; the probe's range
-predicate and the point read's equality never match them either.
+1..2743 widen the range of every partition from 1950 on), so a keyed
+table keeps exact metadata apart from the data: its one record
+(``_table_schema.json``, owned by ``plans.partitioned``) maps each
+partition directory to the SORTED list of the distinct non-null values
+of its merge-key column (``key`` and ``parts``). This module holds the
+key-set algorithms only. A list is harvested by reading only the key
+column of the partition's parquet files with pyarrow on the driver (no
+Spark job) and is kept current by every writer's commit. A partition is
+a candidate only when its list holds a value inside one of the batch's
+per-partition key spans (``bisect``): a point read opens exactly the
+partition holding the key, and when no other partition holds a
+batch-span key the probe job is skipped entirely. NULL keys are never
+listed; the probe's range predicate and the point read's equality never
+match them either.
 
 Crash safety: the apply step of the swap journal
 (``plans.partitioned._replay_swap_journal``, which every writer's commit
-and every crash recovery run) writes the manifest **twice** — before the
-partition swaps with the *union* of each installed partition's old and
-new key sets (a superset is always safe: the manifest may only
-over-include candidates, never exclude a partition that holds a key),
-and after the swaps with the exact staged sets. A crash anywhere in
-between leaves a superset manifest, and the next writer's recovery
-re-applies both. A missing, damaged or older-version manifest self-heals
-on the next load by re-harvesting the key columns (one-time O(#files)
-driver read). Entries whose set is unknown (unreadable files, key types
-that are not JSON-stable scalars) are always candidates.
+and every crash recovery run) publishes a keyed record **twice** —
+before the partition swaps with the *union* of each installed
+partition's old and new key sets (a superset is always safe: the sets
+may only over-include candidates, never exclude a partition that holds
+a key), and after the swaps with the exact staged sets. A crash anywhere
+in between leaves a superset, and the next writer's recovery re-applies
+both. A record without key sets, kept for another key or with damaged
+sets self-heals on the next :func:`load` by re-harvesting the key
+columns (one-time O(#files) driver read). Entries whose set is unknown
+(unreadable files, key types that are not JSON-stable scalars) are
+always candidates.
 """
 
 from __future__ import annotations
 
-import json
 import os
 from bisect import bisect_left
 
-from tmdb_sync_spark.util import write_json_atomic
-
-MANIFEST_NAME = "_key_manifest.json"
-VERSION = 2
 HIVE_NULL_PART = "__HIVE_DEFAULT_PARTITION__"   # Spark's NULL partition dir
 
 # key sets are sorted lists of distinct scalars, or None = unknown
@@ -91,9 +88,9 @@ def harvest_keys(pdir_path: str, key: str):
 
 def _is_valid_keys(r) -> bool:
     # each set must be a strictly increasing list of JSON scalars of one
-    # type (the shape save() writes): anything else — nulls, nested junk,
+    # type (the shape a commit writes): anything else — nulls, nested junk,
     # unsorted or mixed-type lists from a damaged-but-parseable file —
-    # degrades the whole manifest to a re-harvest rather than silently
+    # degrades every set to a re-harvest rather than silently
     # mis-pruning (a wrong set means a moved key is never relocated — a
     # permanent duplicate — or a point read misses its row).
     if not isinstance(r, list):
@@ -108,29 +105,15 @@ def _is_valid_keys(r) -> bool:
     )
 
 
-def stored(target_dir: str, key: str, partition_col: str) -> dict | None:
-    """The key sets as last saved, ``{pdir_name: [keys] | None}``, or
-    None when the manifest file is missing, unparseable, of another
-    version, kept for another key or partition column, or damaged."""
-    try:
-        with open(os.path.join(target_dir, MANIFEST_NAME)) as fh:
-            doc = json.load(fh)
-    except (OSError, ValueError):
-        return None
-    # valid JSON is not necessarily a valid manifest (`null`, a list,
-    # a non-dict "parts", a version-1 range file) — shape failures
-    # degrade like parse failures
-    if not (
-        isinstance(doc, dict)
-        and doc.get("version") == VERSION
-        and doc.get("key") == key
-        and doc.get("partition_col") == partition_col
-        and isinstance(doc.get("parts"), dict)
-        and all(r is None or _is_valid_keys(r)
-                for r in doc["parts"].values())
+def stored(parts) -> dict | None:
+    """``parts`` as key sets ``{pdir_name: [keys] | None}``, or None
+    when it is missing or damaged (not a dict, or a set of the wrong
+    shape)."""
+    if isinstance(parts, dict) and all(
+        r is None or _is_valid_keys(r) for r in parts.values()
     ):
-        return None
-    return doc["parts"]
+        return parts
+    return None
 
 
 def reconcile(target_dir: str, key: str, partition_col: str,
@@ -151,24 +134,11 @@ def reconcile(target_dir: str, key: str, partition_col: str,
     return out
 
 
-def load(target_dir: str, key: str, partition_col: str) -> dict:
-    """Manifest as ``{pdir_name: [keys] | None}`` for the live listing
-    (:func:`reconcile`). A missing, corrupt, older-version or
-    differently-keyed manifest file degrades to a full harvest — never an
-    error."""
-    return reconcile(
-        target_dir, key, partition_col,
-        stored(target_dir, key, partition_col) or {},
-    )
-
-
-def save(target_dir: str, key: str, partition_col: str, parts: dict) -> None:
-    """Atomic, fsynced manifest write (:func:`util.write_json_atomic`)."""
-    doc = {
-        "version": VERSION, "key": key, "partition_col": partition_col,
-        "parts": parts,
-    }
-    write_json_atomic(os.path.join(target_dir, MANIFEST_NAME), doc)
+def load(target_dir: str, key: str, partition_col: str, parts) -> dict:
+    """The stored key sets ``parts`` as ``{pdir_name: [keys] | None}``
+    for the live listing (:func:`reconcile`). Missing or damaged sets
+    (:func:`stored`) degrade to a full harvest — never an error."""
+    return reconcile(target_dir, key, partition_col, stored(parts) or {})
 
 
 def union_keys(a, b):

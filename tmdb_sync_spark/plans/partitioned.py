@@ -19,36 +19,45 @@ reference's per-year sync unit imply, ``app/mongo.py:28``,
 
 Every writer (merge, full overwrite, the index compactions) commits the
 same way: plan → journal → apply. After its staging write it only PLANS
-— the ordered ``[name, install|delete]`` swap ops, the manifest plan
-and the schema record — then :func:`_commit` journals that plan by
-atomic rename (the commit point) and applies it with
+— the ordered ``[name, install|delete]`` swap ops and the table's
+post-commit record — then :func:`_commit` journals that plan by atomic
+rename (the commit point) and applies it with
 :func:`_replay_swap_journal`, the very code crash recovery runs on a
 pending journal. On a local/HDFS filesystem a swap is a directory move;
 on object stores this step is the job-committer's problem (or a real
 table format's) — the read/merge plan above is identical either way.
 
+A table keeps its metadata in ONE record beside the data,
+``_table_schema.json``: the partition column and the read-back schema,
+and for a keyed table the merge key and each partition dir's exact
+sorted key list (``{"partition_col", "schema", "key", "parts"}``; the
+key-set algorithms live in ``plans.manifest``). Every commit publishes
+that one record; a keyed commit publishes a superset of it first
+(:func:`_replay_swap_journal`), so a crash inside the swaps never leaves
+a key list that misses a partition's key.
+
 Cross-partition key moves (a row whose partition value changes — e.g. a
 movie's ``year`` corrected between syncs, since ``year`` derives from the
 API-mutable ``release_date``) are handled: before the merge, source keys
 are probed against the *other* partitions. The probe is pruned at THREE
-levels before any data page is read: (1) the per-partition exact key-set
-manifest (``plans.manifest`` — the sorted distinct keys of each
-partition, harvested from its key column and maintained by every
-commit) drops every partition that holds no key inside the batch's
-per-partition key spans — when nothing survives, the probe job never
-runs; (2) the surviving partitions are read by PATH (file-index level,
-untouched dirs never listed); (3) a batch key-range predicate lets
-parquet row-group stats skip most row groups of what remains (staged
-writes are key-clustered below precisely for this). What's left is one
-shuffle-free job: a column-pruned ``(keys, partition_col)`` scan
-broadcast-LEFT-SEMI-joined with the batch keys. Old partitions holding a
-moved key join the touched set, the full-outer MERGE on keys relocates
-the row to its new partition, and the swap deletes a partition the merge
-emptied — so the reference's global unique-key invariant
-(``app/mongo.py:15``) holds across partition moves exactly as its keyed
-Mongo upsert does (``app/catalog/upsert.py:99-103``). Callers with a
-provably immutable partition key can pass ``detect_moved_keys=False`` to
-skip the probe entirely. The same manifest lets a point read
+levels before any data page is read: (1) the record's per-partition
+exact key sets (the sorted distinct keys of each partition, harvested
+from its key column and maintained by every commit) drop every
+partition that holds no key inside the batch's per-partition key spans
+— when nothing survives, the probe job never runs; (2) the surviving
+partitions are read by PATH (file-index level, untouched dirs never
+listed); (3) a batch key-range predicate lets parquet row-group stats
+skip most row groups of what remains (staged writes are key-clustered
+below precisely for this). What's left is one shuffle-free job: a
+column-pruned ``(keys, partition_col)`` scan broadcast-LEFT-SEMI-joined
+with the batch keys. Old partitions holding a moved key join the
+touched set, the full-outer MERGE on keys relocates the row to its new
+partition, and the swap deletes a partition the merge emptied — so the
+reference's global unique-key invariant (``app/mongo.py:15``) holds
+across partition moves exactly as its keyed Mongo upsert does
+(``app/catalog/upsert.py:99-103``). Callers with a provably immutable
+partition key can pass ``detect_moved_keys=False`` to skip the probe
+entirely. The same key sets let a point read
 (:func:`read_partitioned_for_key`) open only the partition holding the
 key, and the merge reads its touched partitions by path with the stored
 schema, so building its target frame runs no Spark job.
@@ -97,9 +106,10 @@ def write_partitioned(
     ``cluster_by`` sorts each file by those columns after the partition
     column, so parquet row-group key stats are tight from the first
     write (the same clustering the merge's staging writes apply).
-    ``manifest_key`` maintains the per-partition key-set manifest so the
-    first merge needn't harvest it lazily; without it a stale manifest
-    is dropped.
+    ``manifest_key`` stores each partition's exact key set for that
+    column in the table record, so the first merge and point read
+    needn't harvest them lazily; without it the new record holds no key
+    sets, and a table's earlier ones are gone with it.
 
     The new table is written to a staging dir first (a crash there
     leaves the live table untouched and the staging dir discardable).
@@ -168,21 +178,15 @@ def write_partitioned_locked(
     # staged partitions install; existing ones with no staged twin are
     # full-overwrite deletes (handled by _swap_partition's .del path)
     deletes = [n for n in sorted(existing) if n not in staged_names]
-    if manifest_key:
-        manifest_plan = {"key": manifest_key, "post": {
-            n: km.harvest_keys(os.path.join(staging, n), manifest_key)
-            for n in staged_names
-        }}
-    else:
-        # a manifest maintained by earlier merges no longer describes
-        # the table once it's overwritten; drop it so the next merge
-        # re-harvests the key sets instead of pruning on stale ones
-        manifest_plan = {"drop": True}
+    parts = {
+        n: km.harvest_keys(os.path.join(staging, n), manifest_key)
+        for n in staged_names
+    } if manifest_key else None
     _commit(
-        path, staging, partition_col,
+        path, staging,
         [[n, "install"] for n in staged_names]
         + [[n, "delete"] for n in deletes],
-        manifest_plan, _schema_record(df.schema, partition_col),
+        _table_record(df.schema, partition_col, manifest_key, parts),
     )
     df.sparkSession.catalog.refreshByPath(path)
     return True
@@ -224,11 +228,11 @@ class ConcurrentMergeError(ConcurrentWriterError):
 
 
 def _acquire_merge_lock(target_dir: str, wait_s: float = 0.0) -> str:
-    """Single-writer guard for the swap protocol and manifest RMW.
+    """Single-writer guard for the swap protocol and the record RMW.
 
-    The rename-aside swap and the ``_key_manifest.json`` read-modify-write
+    The rename-aside swap and the ``_table_schema.json`` read-modify-write
     are crash-safe but assume ONE writer; two interleaved merges would
-    clobber each other's swaps and manifest key sets with no error. The
+    clobber each other's swaps and key sets with no error. The
     protocol (atomic create-with-payload, dead-pid reclaim, the
     pid-recycling caveat) lives in :func:`util.acquire_dir_lock` —
     shared with the sync cursor file's commit lock; a lock stuck on a
@@ -268,13 +272,13 @@ def break_merge_lock(target_dir: str) -> bool:
 
 SWAP_JOURNAL_NAME = "_swap.journal"
 
-# Table schema persisted beside the data (underscore-prefixed → invisible
-# to Spark's file listing). Every commit writes the read-back schema
-# here, and the readers hand it to Spark instead of inferring one: that
-# skips a schema-inference job per read, and keeps an EMPTY table (an
-# empty overwrite writes no files at all; a merge can legitimately empty
-# every partition) readable as an empty frame — the same role a table
-# format's log plays.
+# The table record persisted beside the data (underscore-prefixed →
+# invisible to Spark's file listing; module docstring). Every commit
+# writes the read-back schema here, and the readers hand it to Spark
+# instead of inferring one: that skips a schema-inference job per read,
+# and keeps an EMPTY table (an empty overwrite writes no files at all; a
+# merge can legitimately empty every partition) readable as an empty
+# frame — the same role a table format's log plays.
 SCHEMA_NAME = "_table_schema.json"
 
 
@@ -282,22 +286,39 @@ def _staging_dir(target_dir: str) -> str:
     return target_dir.rstrip("/") + "__staging"
 
 
-def _schema_record(schema, partition_col: str) -> dict:
-    """Serialize a writer frame's schema in READ-BACK column order:
-    Spark appends partition columns after the data columns when reading
-    a partitioned layout, so the persisted schema must too — readers
-    that pass it to Spark then see the inferred column order."""
+def _table_record(
+    schema, partition_col: str, key: str | None = None,
+    parts: dict | None = None,
+) -> dict:
+    """A table's record: the writer frame's schema in READ-BACK column
+    order (Spark appends partition columns after the data columns when
+    reading a partitioned layout, so the persisted schema must too —
+    readers that pass it to Spark then see the inferred column order),
+    plus, for a keyed table, the key and its per-partition key sets."""
     fields = [f for f in schema.fields if f.name != partition_col] + [
         f for f in schema.fields if f.name == partition_col
     ]
-    return {
+    rec = {
         "partition_col": partition_col,
         "schema": StructType(fields).jsonValue(),
     }
+    if key:
+        rec.update(key=key, parts=parts)
+    return rec
 
 
-def _save_schema_record(target_dir: str, rec: dict) -> None:
-    write_json_atomic(os.path.join(target_dir, SCHEMA_NAME), rec)
+def _load_record(path: str) -> dict | None:
+    """The table's ``_table_schema.json`` record, or ``None`` when no
+    record exists (a table from a writer that predates the record, or no
+    table at all) or it is not a JSON object. A damaged record thus
+    degrades like a missing one: reads infer the schema, key sets are
+    re-harvested, and the next commit publishes a whole record."""
+    try:
+        with open(os.path.join(path, SCHEMA_NAME)) as fh:
+            rec = json.load(fh)
+    except (FileNotFoundError, NotADirectoryError, ValueError):
+        return None
+    return rec if isinstance(rec, dict) else None
 
 
 def table_exists(path: str) -> bool:
@@ -323,21 +344,29 @@ def table_exists(path: str) -> bool:
     )
 
 
-def _stored_schema(path: str) -> StructType | None:
-    """The table's read-back schema from its ``_table_schema.json``
-    record, or ``None`` when no record exists (a table from a writer
-    that predates the record, or no table at all)."""
-    try:
-        with open(os.path.join(path, SCHEMA_NAME)) as fh:
-            return StructType.fromJson(json.load(fh)["schema"])
-    except (FileNotFoundError, NotADirectoryError):
-        return None
+def _record_schema(rec: dict | None) -> StructType | None:
+    return None if rec is None else StructType.fromJson(rec["schema"])
 
 
-def _reader(spark: SparkSession, path: str) -> DataFrameReader:
+def _record_parts(rec, key: str, partition_col: str):
+    """The key sets ``rec`` keeps for ``key`` over ``partition_col``
+    (unchecked: ``plans.manifest`` validates their shape), or None when
+    it keeps none for them (no record, a record without ``key``, or one
+    kept for another key)."""
+    if (
+        rec is not None
+        and rec.get("key") == key
+        and rec.get("partition_col") == partition_col
+    ):
+        return rec.get("parts")
+    return None
+
+
+def _reader(
+    spark: SparkSession, schema: StructType | None
+) -> DataFrameReader:
     # the stored schema spares Spark its schema-inference job; without
     # a record the read falls back to inference
-    schema = _stored_schema(path)
     return spark.read if schema is None else spark.read.schema(schema)
 
 
@@ -351,13 +380,13 @@ def read_partitioned(spark: SparkSession, path: str) -> DataFrame:
     (zero partition dirs) reads as an empty frame of the record's
     columns. Only a table without a record falls back to inference,
     which fails on an empty table."""
-    return _reader(spark, path).parquet(path)
+    return _reader(spark, _record_schema(_load_record(path))).parquet(path)
 
 
 def read_partitioned_for_key(
     spark: SparkSession, path: str, key: str, value
 ) -> DataFrame:
-    """Point-lookup read pruned by the KEY-SET MANIFEST: only partition
+    """Point-lookup read pruned by the record's KEY SETS: only partition
     dirs whose key set holds ``value`` are listed or opened — the
     read-side twin of the merge's moved-key probe pruning. The sets are
     exact, so on a table with unique keys (the ingest's movies table) a
@@ -369,20 +398,19 @@ def read_partitioned_for_key(
     Like :func:`read_partitioned`, the schema comes from the table's
     ``_table_schema.json`` record, so no schema-inference job runs.
     Degrades to :func:`read_partitioned` (full listing) when the record
-    is absent or the manifest is absent, damaged or kept for a DIFFERENT
-    key; unknown sets or type-incomparable values are conservatively
-    read. Zero candidates returns an empty frame of the persisted
-    schema. The usual retention caveat applies: rows outside pruned
-    partitions are invisible by construction, so callers must pass the
-    table's manifest key."""
+    is absent or holds no key sets, damaged ones or ones kept for a
+    DIFFERENT key; unknown sets or type-incomparable values are
+    conservatively read. Zero candidates returns an empty frame of the
+    persisted schema. The usual retention caveat applies: rows outside
+    pruned partitions are invisible by construction, so callers must
+    pass the table's key."""
     try:
-        with open(os.path.join(path, SCHEMA_NAME)) as fh:
-            rec = json.load(fh)
+        rec = _load_record(path)
         pcol = rec["partition_col"]
         schema = StructType.fromJson(rec["schema"])
     except (OSError, ValueError, KeyError, TypeError):
         return read_partitioned(spark, path)
-    entries = km.stored(path, key, pcol)
+    entries = km.stored(_record_parts(rec, key, pcol))
     if entries is None:
         return read_partitioned(spark, path)
     cand = km.candidates(
@@ -396,8 +424,7 @@ def read_partitioned_for_key(
 
 
 def _write_swap_journal(
-    target_dir: str, staging: str, partition_col: str,
-    ops: Sequence, manifest_plan: dict | None, schema_record: dict,
+    target_dir: str, staging: str, ops: Sequence, record: dict,
 ) -> None:
     """Atomically record a writer's swap plan — the COMMIT POINT every
     writer reaches through :func:`_commit`.
@@ -406,11 +433,10 @@ def _write_swap_journal(
     only after Spark's staging write returns) and the post-state MUST be
     installed; recovery replays it to completion. ``ops`` is the ORDERED
     ``[name, "install"|"delete"]`` list (order carries the merge's
-    delete-before-insert moved-key discipline). ``manifest_plan`` is
-    ``None`` (leave the manifest alone), ``{"drop": True}`` (overwrite
-    without a key: a stale manifest must not survive), or
-    ``{"key": k, "post": {...}}`` (the exact post-swap manifest to
-    install). Underscore-prefixed, so Spark's file listing skips it."""
+    delete-before-insert moved-key discipline). ``record`` is the
+    table's full post-commit record (:func:`_table_record`), kept under
+    ``schema_record``. Underscore-prefixed, so Spark's file listing
+    skips it."""
     # The journal promises staging's CONTENT: make it durable BEFORE the
     # commit point, or a power loss could persist the journal while the
     # staged parquet pages are lost — and replay would then install torn
@@ -421,25 +447,19 @@ def _write_swap_journal(
     # write_json_atomic fsyncs the file and the dir holding the rename
     write_json_atomic(os.path.join(target_dir, SWAP_JOURNAL_NAME), {
         "staging": staging,
-        "partition_col": partition_col,
         "ops": [list(op) for op in ops],
-        "manifest": manifest_plan,
-        "schema_record": schema_record,
+        "schema_record": record,
     })
 
 
 def _commit(
-    target_dir: str, staging: str, partition_col: str,
-    ops: Sequence, manifest_plan: dict | None, schema_record: dict,
+    target_dir: str, staging: str, ops: Sequence, record: dict,
 ) -> None:
     """Journal a writer's swap plan (the commit point), then apply it
     with :func:`_replay_swap_journal` — the same code recovery runs on a
     pending journal, so a crash anywhere in the apply resumes exactly
     where the normal path stopped."""
-    _write_swap_journal(
-        target_dir, staging, partition_col, ops, manifest_plan,
-        schema_record,
-    )
+    _write_swap_journal(target_dir, staging, ops, record)
     _replay_swap_journal(target_dir)
 
 
@@ -450,17 +470,18 @@ def _replay_swap_journal(target_dir: str) -> None:
 
     - Journal present → staging committed: apply the plan FORWARD, in
       journal order.
-      1. Pre-swap manifest: a keyed plan saves the current manifest
-         with each install op's ``post`` key set unioned in (a superset is
-         always safe — a crash anywhere in the swaps leaves the manifest
-         over-inclusive, never wrong); ``{"drop": true}`` unlinks it.
+      1. Pre-swap record, keyed records only: publish the current
+         record (its schema; the journal's when there is none) with
+         each install op's key set the union of its current and staged
+         sets (a superset is always safe — a crash anywhere in the swaps
+         leaves the key sets over-inclusive, never wrong).
       2. Swaps: install ops whose staged dir is still in staging run
          the normal swap; ones already moved out are done (any half-swap
          residue is a dot-prefixed dir the caller's generic leftover
          pass finishes). Delete ops re-run idempotently.
-      3. The exact post-swap manifest and the schema record are
-         written, the journal is removed, then staging — a crash inside
-         the apply itself just applies again.
+      3. The journal's record is published, the journal is removed,
+         then staging — a crash inside the apply itself just applies
+         again.
     - No journal but a staging dir → the writer crashed before its
       commit point: the current table is the truth (an uncommitted
       overwrite never happened; an uncommitted merge batch is simply
@@ -472,6 +493,7 @@ def _replay_swap_journal(target_dir: str) -> None:
     pre-existing one scheduled for deletion), and the atomic-rename
     write means garble only happens through outside interference."""
     jpath = os.path.join(target_dir, SWAP_JOURNAL_NAME)
+    rpath = os.path.join(target_dir, SCHEMA_NAME)
     staging = _staging_dir(target_dir)
     if not os.path.exists(jpath):
         if os.path.isdir(staging):
@@ -481,29 +503,23 @@ def _replay_swap_journal(target_dir: str) -> None:
         with open(jpath) as fh:
             j = json.load(fh)
         ops = [(n, kind) for n, kind in j["ops"]]
-        partition_col = j["partition_col"]
-        manifest_plan = j["manifest"]
         staging = j["staging"]
+        rec = j.get("schema_record")
     except (OSError, ValueError, KeyError, TypeError) as e:
         raise ConcurrentWriterError(
             f"unreadable swap journal {jpath!r} — cannot replay a "
             "half-applied write without its swap plan; inspect the "
             "table and remove the journal by hand"
         ) from e
-    mp = os.path.join(target_dir, km.MANIFEST_NAME)
-    keyed = bool(manifest_plan) and not manifest_plan.get("drop")
-    if keyed:
-        key, post = manifest_plan["key"], manifest_plan["post"]
-        pre = km.load(target_dir, key, partition_col)
+    if rec and rec.get("key"):
+        key, pcol = rec["key"], rec["partition_col"]
+        cur = _load_record(target_dir)
+        pre = km.load(target_dir, key, pcol, _record_parts(cur, key, pcol))
         for n, kind in ops:
             if kind == "install":
-                pre[n] = (
-                    km.union_keys(pre[n], post.get(n))
-                    if n in pre else post.get(n)
-                )
-        km.save(target_dir, key, partition_col, pre)
-    elif manifest_plan and os.path.exists(mp):
-        os.unlink(mp)
+                staged = rec["parts"].get(n)
+                pre[n] = km.union_keys(pre[n], staged) if n in pre else staged
+        write_json_atomic(rpath, {**(cur or rec), "key": key, "parts": pre})
     for n, kind in ops:
         if kind == "install" and not os.path.isdir(os.path.join(staging, n)):
             # Legitimately reachable ONLY as "already moved into the
@@ -512,7 +528,7 @@ def _replay_swap_journal(target_dir: str) -> None:
             # caller's generic leftover pass handles, never a missing
             # dst). A missing staged dir with NO installed dst means the
             # staging area was removed externally — completing the
-            # replay would install the journal's post-swap manifest and
+            # replay would install the journal's post-swap record and
             # run its deletes over a table that never received the new
             # data: a corrupt "success". Same outside-interference class
             # as a garbled journal, same loud refusal.
@@ -526,10 +542,8 @@ def _replay_swap_journal(target_dir: str) -> None:
                 )
             continue
         _swap_partition(target_dir, staging, n)  # src absent → .del path
-    if keyed:
-        km.save(target_dir, key, partition_col, post)
-    if j.get("schema_record"):
-        _save_schema_record(target_dir, j["schema_record"])
+    if rec:
+        write_json_atomic(rpath, rec)
     os.unlink(jpath)
     if os.path.isdir(staging):
         shutil.rmtree(staging, ignore_errors=True)
@@ -539,7 +553,7 @@ def _replay_swap_journal(target_dir: str) -> None:
 # into a table dir
 _PUBLISHED_TMP = tuple(
     f"{name}.tmp."
-    for name in (SWAP_JOURNAL_NAME, km.MANIFEST_NAME, SCHEMA_NAME)
+    for name in (SWAP_JOURNAL_NAME, SCHEMA_NAME)
 )
 
 
@@ -562,7 +576,7 @@ def _recover_leftovers(target_dir: str) -> None:
     leftovers the generic pass below then finishes.
 
     Also deletes the tmp files of a crashed :func:`util.write_json_atomic`
-    publish of the journal, manifest or schema record: every caller
+    publish of the journal or the table record: every caller
     holds ``_merge.lock``, so no live writer owns one.
     """
     if not os.path.isdir(target_dir):
@@ -653,7 +667,7 @@ def merge_into_partitioned(
     rewriting only touched partitions.
 
     Single-writer: the whole merge (recovery, probe, staging write, swap,
-    manifest maintenance) runs under the table's ``_merge.lock``
+    key-set maintenance) runs under the table's ``_merge.lock``
     (:func:`_acquire_merge_lock`); a concurrent merge into the same
     ``target_dir`` raises :class:`ConcurrentMergeError` instead of
     interleaving swaps, and a lock abandoned by a crashed writer is
@@ -669,7 +683,7 @@ def merge_into_partitioned(
 
     ``detect_moved_keys`` (default on) probes the non-touched partitions
     for source keys whose partition value changed (module docstring):
-    manifest key-set pruning → path-restricted read → row-group range
+    record key-set pruning → path-restricted read → row-group range
     predicate → one broadcast-LEFT-SEMI job. Old partitions holding a
     moved key are merged (and rewritten) too, so the key's stale row is
     relocated, not duplicated — a moved key classifies as ``update``,
@@ -678,7 +692,7 @@ def merge_into_partitioned(
 
     Returns ``{"touched": [...], "counts": {action: n} | None,
     "probe_partitions": [pdir, ...]}`` — the partitions the probe
-    actually had to read (empty = the manifest pruned everything).
+    actually had to read (empty = the key sets pruned everything).
     """
     lock = _acquire_merge_lock(target_dir, wait_s=lock_wait_s)
     try:
@@ -696,6 +710,7 @@ def merge_into_partitioned(
 def _read_target(
     spark: SparkSession, target_dir: str, partition_col: str,
     touched: Sequence, source_schema: StructType,
+    schema: StructType | None,
 ) -> DataFrame:
     """The merge's target frame: the rows of the ``touched`` partitions.
 
@@ -706,8 +721,8 @@ def _read_target(
     pre-record writer, or a rendering divergence that hides the real dir
     under another name) the whole table is read with inference and
     filtered to ``touched`` — the read the divergence backstops in
-    :func:`_merge_locked` rely on."""
-    schema = _stored_schema(target_dir)
+    :func:`_merge_locked` rely on. ``schema`` is the table record's
+    (``None`` without a record)."""
     dirs = [
         os.path.join(target_dir, _pdir_name(partition_col, v))
         for v in touched
@@ -764,8 +779,11 @@ def _merge_locked(
     _recover_leftovers(target_dir)
     # recovery may have changed the dir listing; drop any cached file index
     spark.catalog.refreshByPath(target_dir)
+    record = _load_record(target_dir)
+    schema = _record_schema(record)
+    stored_parts = _record_parts(record, keys[0], partition_col)
     # ONE job gathers the batch's partition values AND, per partition, the
-    # batch's key span — the spans drive manifest pruning below (a NULL
+    # batch's key span — the spans drive key-set pruning below (a NULL
     # group carries NULL-partition presence directly)
     stats = source.groupBy(partition_col).agg(
         F.min(keys[0]).alias("kmin"),
@@ -779,9 +797,9 @@ def _merge_locked(
     probe_parts: list[str] = []
     manifest: dict | None = None
     if detect_moved_keys and touched and spans:
-        manifest = km.load(target_dir, keys[0], partition_col)
+        manifest = km.load(target_dir, keys[0], partition_col, stored_parts)
         touched_dirs = {_pdir_name(partition_col, v) for v in touched}
-        # manifest pruning: only partitions holding a key inside a batch
+        # key-set pruning: only partitions holding a key inside a batch
         # span are read — by PATH, so excluded partitions are
         # never even listed; when nothing intersects, no job runs at all
         probe_parts = km.candidates(manifest, touched_dirs, spans)
@@ -795,7 +813,7 @@ def _merge_locked(
             # stats — staged partitions are written key-clustered below
             # precisely so this scan skips most row groups.
             others = (
-                _reader(spark, target_dir).option("basePath", target_dir)
+                _reader(spark, schema).option("basePath", target_dir)
                 .parquet(*[os.path.join(target_dir, p) for p in probe_parts])
                 .where(F.col(keys[0]).between(F.lit(kmin), F.lit(kmax)))
                 .select(*keys, partition_col)
@@ -815,7 +833,7 @@ def _merge_locked(
             }
             touched += [v for v in moved if v not in touched]
     target = _read_target(
-        spark, target_dir, partition_col, touched, source.schema
+        spark, target_dir, partition_col, touched, source.schema, schema
     )
     # Self-healing replay: a crash between two partition swaps of a
     # key-move batch can leave a key duplicated across partition dirs
@@ -934,30 +952,30 @@ def _merge_locked(
                 "partition-dir rendering diverged; refusing to skip the "
                 "emptied-partition delete"
             )
-    # maintain the manifest whenever probing is on (manifest may be None
-    # for an empty batch) or one already exists from a probing caller
-    manifest_plan = None
-    if detect_moved_keys or os.path.exists(
-        os.path.join(target_dir, km.MANIFEST_NAME)
-    ):
+    # maintain the key sets whenever probing is on (manifest may be None
+    # for an empty batch) or the record already holds some from a
+    # probing caller
+    key = post = None
+    if detect_moved_keys or (record or {}).get("key"):
         if manifest is None:
-            manifest = km.load(target_dir, keys[0], partition_col)
-        # exact post-swap manifest: swapped partitions take their staged
+            manifest = km.load(
+                target_dir, keys[0], partition_col, stored_parts)
+        # exact post-swap key sets: swapped partitions take their staged
         # key sets, emptied ones drop out
+        key = keys[0]
         post = {p: r for p, r in manifest.items() if p not in swap_names}
         post.update({
             n: km.harvest_keys(os.path.join(staging, n), keys[0])
             for n in staged_names
         })
-        manifest_plan = {"key": keys[0], "post": post}
     # the ordered plan carries the delete-before-insert moved-key order;
     # a crash after the journal rename rolls the batch FORWARD at the
     # next writer's entry, before it the batch never applied
     _commit(
-        target_dir, staging, partition_col,
+        target_dir, staging,
         [[n, "install" if n in staged_names else "delete"]
          for n in swap_names],
-        manifest_plan, _schema_record(to_write.schema, partition_col),
+        _table_record(to_write.schema, partition_col, key, post),
     )
     # Spark's session-wide FileStatusCache would otherwise serve the old
     # listing (deleted part files) to subsequent reads of this path.

@@ -9,7 +9,7 @@ Here all of a state dir's cursors live in ONE small JSON file,
 ISO text. A commit is a read-modify-write under ``{path}/_state.lock``
 published with :func:`util.write_json_atomic` (fsynced tmp file,
 ``os.replace``, dir fsync), the same commit step the partitioned
-tables' journal, key manifest and schema record use. A reader sees the
+tables' journal and table record use. A reader sees the
 old file or the new one, never a torn one, and neither side starts a
 Spark job: a cursor is bookkeeping, not data to scan. Only
 :func:`read_state` builds a Spark frame, for the callers that join or

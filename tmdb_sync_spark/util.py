@@ -257,7 +257,7 @@ def write_json_atomic(path: str, doc) -> None:
     tmp = f"{path}.tmp.{os.getpid()}"
     with open(tmp, "w") as fh:
         # one write: json.dump streams every list item as its own write,
-        # which dominates the cost of a key manifest's long key lists
+        # which dominates the cost of a table record's long key lists
         fh.write(json.dumps(doc))
         fh.flush()
         os.fsync(fh.fileno())
@@ -606,7 +606,4 @@ def check_store_contract(
                 "code version)"
             )
         return
-    tmp = f + f".tmp-{os.getpid()}"
-    with open(tmp, "w") as fh:
-        _json.dump(expected, fh, sort_keys=True)
-    os.replace(tmp, f)
+    write_json_atomic(f, expected)
