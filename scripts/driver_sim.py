@@ -2,7 +2,7 @@
 factory, non-UTC-pinned), run entry() smoke + every queries() entry at
 sf0.01 against oracle_sql() via DuckDB, order-insensitive compare."""
 import os, sys, math, time
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import SparkSession
 
 spark = (SparkSession.builder.master("local[8]")

@@ -1265,3 +1265,96 @@ def test_manifest_at_first_swap_covers_old_and_staged_ranges(
     for n in installs:
         assert set(at_swap[n]) >= set(old.get(n) or []) | set(staged[n]), (
             n, at_swap[n], old.get(n), staged[n])
+
+
+# --- count_actions: the counts are observed on the staging write --------
+
+_KYP = "k BIGINT, y INT, price DOUBLE"
+
+
+def _counted_merge(spark, target, source):
+    return merge_into_partitioned(
+        spark, target, source, keys=["k"], partition_col="y",
+        count_actions=True,
+    )["counts"]
+
+
+def test_counted_merge_of_empty_source_returns_no_counts(spark, tmp_path):
+    import threading
+
+    target = str(tmp_path / "t")
+    write_partitioned(
+        spark.createDataFrame([(1, 1996, 1.0)], _KYP), target, "y")
+    out: dict = {}
+    t = threading.Thread(
+        target=lambda: out.update(c=_counted_merge(
+            spark, target, spark.createDataFrame([], _KYP))),
+        daemon=True,
+    )
+    t.start()
+    t.join(timeout=120)
+    assert not t.is_alive(), "reading the observed counts hung"
+    assert out["c"] == {}
+
+
+def test_counted_all_update_batch_returns_only_updates(spark, tmp_path):
+    target = str(tmp_path / "t")
+    write_partitioned(spark.createDataFrame(
+        [(1, 1996, 1.0), (2, 1996, 2.0), (3, 1997, 3.0)], _KYP), target, "y")
+    source = spark.createDataFrame([(1, 1996, 10.0), (2, 1996, 20.0)], _KYP)
+    assert _counted_merge(spark, target, source) == {"update": 2}
+
+
+def test_counted_mixed_batch_equals_group_by_action(spark, tmp_path):
+    from tmdb_sync_spark.plans.merge import ACTION_COL, merge_into
+
+    target = str(tmp_path / "t")
+    base = spark.createDataFrame(
+        [(k, 1996 + k % 3, float(k)) for k in range(1, 13)], _KYP)
+    write_partitioned(base, target, "y")
+    # updates and inserts in 1996/1997, an insert into a new 1999; the
+    # untouched rows of 1996/1997 are noops, 1998 is not read at all
+    source = spark.createDataFrame(
+        [(3, 1996, 30.0), (4, 1997, 40.0), (7, 1997, 70.0),
+         (20, 1996, 2.0), (21, 1999, 2.1)], _KYP)
+    want = {
+        r[ACTION_COL]: r["count"]
+        for r in merge_into(
+            spark.read.parquet(target).where(F.col("y").isin(1996, 1997)),
+            source, ["k"], with_action=True,
+        ).groupBy(ACTION_COL).count().collect()
+    }
+    assert set(want) == {"insert", "update", "noop"}
+    assert _counted_merge(spark, target, source) == want
+
+
+def test_concurrent_counted_merges_keep_their_own_counts(spark, tmp_path):
+    import threading
+
+    targets = [str(tmp_path / "a"), str(tmp_path / "b")]
+    for t in targets:
+        write_partitioned(spark.createDataFrame(
+            [(1, 1996, 1.0), (2, 1997, 2.0)], _KYP), t, "y")
+    sources = [
+        spark.createDataFrame([(1, 1996, 9.0), (5, 1996, 5.0)], _KYP),
+        spark.createDataFrame(
+            [(k, 1997, 0.0) for k in range(10, 17)], _KYP),
+    ]
+    got: dict = {}
+    errors: list = []
+
+    def run(i):
+        try:
+            got[i] = _counted_merge(spark, targets[i], sources[i])
+        except Exception as e:          # surfaced below, not swallowed
+            errors.append(e)
+
+    threads = [threading.Thread(target=run, args=(i,)) for i in (0, 1)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=300)
+    assert not any(t.is_alive() for t in threads), "a counted merge hung"
+    assert not errors, errors
+    assert got == {0: {"update": 1, "insert": 1},
+                   1: {"insert": 7, "noop": 1}}

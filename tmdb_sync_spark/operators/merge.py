@@ -94,7 +94,7 @@ def j1_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     - WHEN NOT MATCHED: insert the source row.
     - ``merge_action`` column = insert/update classification → the
       reference's inserted/updated counters (``app/sync_top.py:275-286``,
-      A8) are one ``groupBy(merge_action).count()`` over this output —
+      A8) are per-action counts over this output (observed metrics) —
       value-checked here per-row (stronger than the count aggregate) and
       as live counters by ``st4_a8_cursor_errors``.
     """

@@ -12,8 +12,8 @@ Scale notes:
   MERGE) — the helper takes the already-pruned target.
 - ``WHEN MATCHED / NOT MATCHED`` classification comes out as a
   ``merge_action`` column, giving the reference's inserted/updated counters
-  (``app/sync_top.py:267-273``) via one ``groupBy(merge_action).count()``
-  instead of per-row bookkeeping.
+  (``app/sync_top.py:267-273``) as aggregates over it (observed metrics of
+  the partitioned MERGE's staging write) instead of per-row bookkeeping.
 """
 
 from __future__ import annotations

@@ -73,6 +73,7 @@ import shutil
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, DataFrameReader, SparkSession
+from pyspark.sql import Observation
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -676,10 +677,10 @@ def merge_into_partitioned(
     ``matched_update`` / ``not_matched_insert`` pass through to
     :func:`plans.merge.merge_into` (J4 preserve rules, ``$setOnInsert``).
     With ``count_actions`` the insert/update/noop row counts come back
-    (the reference's per-run counters, ``app/sync_top.py:267-273``) —
-    computed over the cached merge output, so the full-outer join runs
-    once and both the counters and the staging write read the cache;
-    every job in here scans touched partitions only.
+    (the reference's per-run counters, ``app/sync_top.py:267-273``;
+    actions with no rows are absent) — observed on the staging write
+    itself, so the full-outer join runs once and the counts cost no job
+    of their own; every job in here scans touched partitions only.
 
     ``detect_moved_keys`` (default on) probes the non-touched partitions
     for source keys whose partition value changed (module docstring):
@@ -862,25 +863,25 @@ def _merge_locked(
         with_action=count_actions,
     )
     staging = _staging_dir(target_dir)
-    counts: dict | None = None
+    to_write = merged
     if count_actions:
-        merged = merged.persist()
-        counts = {
-            r[ACTION_COL]: r["n"]
-            for r in merged.groupBy(ACTION_COL)
-                           .agg(F.count(F.lit(1)).alias("n")).collect()
-        }
-        to_write = merged.drop(ACTION_COL)
-    else:
-        to_write = merged
+        # the counts ride the staging write as observed metrics: no job
+        # and no cache of their own
+        observed = Observation()
+        to_write = merged.observe(observed, *[
+            F.count_if(F.col(ACTION_COL) == a).alias(a)
+            for a in ("insert", "update", "noop")
+        ]).drop(ACTION_COL)
     # key-clustered staging: a local sort per task makes parquet row-group
     # min/max stats on the key tight, so future moved-key probes (and any
     # key-range read) skip most row groups of untouched data
     to_write.sortWithinPartitions(partition_col, *keys).write.partitionBy(
         partition_col
     ).mode("overwrite").parquet(staging)
-    if count_actions:
-        merged.unpersist()
+    counts = (
+        {a: n for a, n in observed.get.items() if n} if count_actions
+        else None
+    )
     # Swap partitions that LOSE a moved key before the ones that receive
     # it: a crash mid-loop then leaves the moved key temporarily absent
     # (stale copy already deleted, new copy not yet installed) — repaired

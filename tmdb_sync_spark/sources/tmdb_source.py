@@ -88,6 +88,26 @@ def _page_results(api, mode: str, page: int, *, year: int,
     return rows
 
 
+def feed_total_pages(mode: str, start_page: int, *, year: int = 0,
+                     content_type: str = "movie",
+                     category: str = "top_rated") -> int | None:
+    """The feed's length from its OWN pagination metadata (the TMDB
+    discover envelope, which every transport reports): one probe of
+    ``start_page`` through the shared retry client; ``None`` when the
+    transport omits ``total_pages``. The reader plans its partitions from
+    it, and the sync loops stop at it on the driver — fixture-sized plans
+    silently truncated or over-scanned a live feed (review finding)."""
+    api = get_api()
+    if mode == "top":
+        resp = api.discover_top(start_page)
+    elif mode == "category":
+        resp = api.category(category, start_page, content_type)
+    else:
+        resp = api.discover_year(year, start_page, content_type)
+    tp = resp.get("total_pages")
+    return int(tp) if tp is not None else None
+
+
 class TmdbDiscoverReader(DataSourceReader):
     def __init__(self, options: dict):
         self.mode = options.get("mode", "top")
@@ -105,35 +125,16 @@ class TmdbDiscoverReader(DataSourceReader):
         return fixture.YEAR_ITEMS[self.content_type]
 
     def _total_pages(self) -> int:
-        """Feed length for partition planning, from the FEED's own
-        pagination metadata — one driver-side probe of ``start_page``
-        through the shared retry client, memoized per reader.
-
-        Planning from the fixture constants was a real-API bug (review
-        finding): with ``TMDB_API_BASE`` set the transports return the
-        live feed's ``total_pages``, and the fixture-sized plan silently
-        truncated (or over-scanned) the real feed. Every transport —
-        fixture included — reports ``total_pages`` on each page response
-        (the TMDB discover envelope), so planning uses the same seam the
-        data does; the fixture math remains only as the fallback for a
-        transport that omits the field. Memoized at plan time: a feed
-        that grows mid-scan is the next sync run's work (the ingest
-        loop's ST3 empty-page stop owns liveness, not the planner)."""
+        """:func:`feed_total_pages` at ``start_page``, memoized per reader
+        (a feed that grows mid-scan is the next run's work); the fixture
+        math is the fallback for a transport that omits the field."""
         if getattr(self, "_tp", None) is None:
-            api = get_api()
-            if self.mode == "top":
-                resp = api.discover_top(self.start_page)
-            elif self.mode == "category":
-                resp = api.category(
-                    self.category, self.start_page, self.content_type
-                )
-            else:
-                resp = api.discover_year(
-                    self.year, self.start_page, self.content_type
-                )
-            tp = resp.get("total_pages")
+            tp = feed_total_pages(
+                self.mode, self.start_page, year=self.year,
+                content_type=self.content_type, category=self.category,
+            )
             self._tp = (
-                int(tp) if tp is not None
+                tp if tp is not None
                 else -(-self._total_items() // fixture.PAGE_SIZE)
             )
         return self._tp
@@ -146,11 +147,11 @@ class TmdbDiscoverReader(DataSourceReader):
             for p in range(self.start_page, last + 1, PAGES_PER_PARTITION)
         ]
         if not parts:
-            # start_page beyond the feed (the normal end state of a
-            # resumed sync): an EMPTY page range, not an empty list —
-            # PySpark substitutes [None] for an empty partitions() and
-            # read(None) would crash the scan instead of yielding the
-            # empty page the ingest loop's ST3 stop condition expects.
+            # start_page beyond the feed (a feed that shrank after the
+            # sync loop's driver probe): an EMPTY page range, not an empty
+            # list — PySpark substitutes [None] for an empty partitions()
+            # and read(None) would crash the scan instead of yielding the
+            # empty page the ingest loop's ST3 backstop expects.
             parts = [_PageRange(self.start_page, self.start_page - 1)]
         return parts
 

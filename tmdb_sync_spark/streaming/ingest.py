@@ -8,7 +8,8 @@ source, enriched in two ``mapInPandas`` passes, derived columns computed in
 Catalyst, and upserted with ONE set-oriented MERGE (``plans.merge``) — then
 the cursor row commits (ST1) and failures append to the dead-letter table
 (ST4). Resume = start from ``cursor.page + 1`` (ST2); bounded backfill =
-``max_pages`` / empty-page stop (ST3).
+``max_pages`` / end-of-feed stop (ST3): no batch past the feed's
+``total_pages``, probed on the driver; an empty batch is the backstop.
 
 Failure injection is deterministic (id % 97 → 'http', id % 89 → 'other'),
 standing in for the reference's per-item error taxonomy
@@ -21,9 +22,8 @@ and every micro-batch MERGE goes through
 partition filter on the years present in the batch and ONLY those
 partition directories are rewritten (round-1 verdict finding 2: the
 previous full-state rewrite was O(total state) per batch). On a cluster
-the same call sites target Delta/Iceberg. Batch counters (A8) come from
-one ``groupBy(merge_action)`` over the merge output, not per-row
-bookkeeping.
+the same call sites target Delta/Iceberg. Batch counters (A8) are
+observed metrics of the merge's staging write, not per-row bookkeeping.
 """
 
 from __future__ import annotations
@@ -52,6 +52,7 @@ from tmdb_sync_spark.sources.http_client import (
     CATEGORY_OTHER,
 )
 from tmdb_sync_spark.sources.queries import discover
+from tmdb_sync_spark.sources.tmdb_source import feed_total_pages
 from tmdb_sync_spark.streaming import state as st
 from tmdb_sync_spark.util import materialize_once
 
@@ -285,7 +286,10 @@ def run_sync_top(
     page = (cursor["page"] + 1) if resume and start_page is None else (start_page or 1)
     inserted = updated = 0
     processed = 0
-    while processed < max_pages:
+    # a start past the feed's end plans an empty batch (the reader's own
+    # rule), so stop here instead of staging it
+    total = feed_total_pages("top", page)
+    while processed < max_pages and (total is None or page <= total):
         n = min(batch_pages, max_pages - processed)
         # Stage the discover feed ONCE per batch: _build_source fans it
         # into two enrichment subtrees (details + frames) which Spark
@@ -301,7 +305,7 @@ def run_sync_top(
         src = _build_source(feed).cache()
         try:
             last_page = src.agg(F.max("page")).first()[0]
-            if last_page is None:       # empty page → terminate (ST3)
+            if last_page is None:       # backstop: feed shrank (ST3)
                 break
             failed = F.col("id") % 97 == 0
             skipped = F.col("id") % 89 == 0
@@ -445,7 +449,14 @@ def run_sync_years(
         cur0 = st.read_cursor(spark, cursors_path, key)
         page = (cur0["page"] + 1) if resume and cur0["page"] > 0 else 1
         year_ins = year_upd = 0
-        while page <= YEARS_MAX_PAGES and processed_total < limit:
+        # stop at the year's end on the driver, as run_sync_top does; a
+        # year done at the page cap probes nothing
+        end_page = YEARS_MAX_PAGES
+        if page <= end_page:
+            total = feed_total_pages("years", page, year=year,
+                                     content_type=content_type)
+            end_page = end_page if total is None else min(end_page, total)
+        while page <= end_page and processed_total < limit:
             n = min(batch_pages, YEARS_MAX_PAGES - page + 1)
             feed = materialize_once(
                 discover(spark, mode="years", year=year,
@@ -458,7 +469,7 @@ def run_sync_years(
             src = _build_source(feed).cache()
             try:
                 last_page = src.agg(F.max("page")).first()[0]
-                if last_page is None:       # empty page → year done (ST3)
+                if last_page is None:       # backstop: feed shrank (ST3)
                     break
                 failed = F.col("id") % 97 == 0
                 skipped = F.col("id") % 89 == 0
