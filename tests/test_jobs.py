@@ -138,16 +138,15 @@ def test_resync_stages_a_fresh_feed_per_run(spark):
     the same pages must MISS the staged-feed cache (per-run token in the
     key) — against a live API the old behavior silently replayed the
     previous run's discover snapshot."""
-    from tmdb_sync_spark import util
+    from tests.test_sync_feed_end import staged_keys
 
     d = scratch_dir("resync_test_")
-    before = {k for k in util._MAT_CACHE if "ingest_feed" in k}
-    run_sync_top(spark, d, max_pages=2, resume=False)
-    new1 = {k for k in util._MAT_CACHE if "ingest_feed" in k} - before
+    with staged_keys("ingest_feed") as new1:
+        run_sync_top(spark, d, max_pages=2, resume=False)
     assert new1, "first run staged no feed"
-    run_sync_top(spark, d, max_pages=2, resume=False)
-    new2 = {k for k in util._MAT_CACHE if "ingest_feed" in k} - before - new1
+    with staged_keys("ingest_feed") as new2:
+        run_sync_top(spark, d, max_pages=2, resume=False)
     # the second run staged its OWN feed (fresh token) instead of
     # replaying the first run's snapshot
-    assert len(new2) == len(new1) > 0, \
+    assert len(new2) == len(new1) > 0 and not set(new1) & set(new2), \
         "re-sync served the previous run's feed"

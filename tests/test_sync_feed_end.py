@@ -5,8 +5,10 @@ only: the tv year feed is 53 items, 3 pages."""
 
 from __future__ import annotations
 
+import contextlib
 import os
 import shutil
+import tempfile
 
 import pytest
 
@@ -22,16 +24,29 @@ TV_PAGES = -(-TV_ITEMS // fixture.PAGE_SIZE)
 TOP_PAGES = fixture.top_total_pages()
 
 
-def _staged(tag: str) -> set:
-    return {k for k in util._MAT_CACHE if tag in k}
+@contextlib.contextmanager
+def staged_keys(tag: str):
+    """Collect the cache keys of the ``tag`` feeds staged in the block,
+    through the ``ingest.materialize_once`` seam."""
+    keys: list[tuple] = []
+    real = ingest.materialize_once
+
+    def record(df, cache_key, prefix):
+        if cache_key[0] == tag:
+            keys.append(cache_key)
+        return real(df, cache_key, prefix)
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(ingest, "materialize_once", record)
+        yield keys
 
 
 def _sync_tv_year(spark, state, **kw):
     """Run the tv year; return its result and the feeds it staged."""
-    before = _staged("years_feed")
-    out = run_sync_years(spark, state, start_year=YEAR,
-                         content_type="tv", batch_pages=TV_PAGES, **kw)
-    return out, _staged("years_feed") - before
+    with staged_keys("years_feed") as staged:
+        out = run_sync_years(spark, state, start_year=YEAR,
+                             content_type="tv", batch_pages=TV_PAGES, **kw)
+    return out, staged
 
 
 @pytest.fixture(scope="module")
@@ -62,7 +77,7 @@ def test_resumed_finished_year_stages_nothing(spark, synced_year):
     with open(path, "rb") as f:
         before = f.read()
     out, staged = _sync_tv_year(spark, state)
-    assert staged == set()
+    assert staged == []
     assert (out["processed"], out["inserted"], out["updated"]) == (0, 0, 0)
     with open(path, "rb") as f:
         assert f.read() == before
@@ -70,9 +85,10 @@ def test_resumed_finished_year_stages_nothing(spark, synced_year):
 
 def test_top_start_past_the_feed_stages_nothing(spark, tmp_path):
     state = str(tmp_path / "s")
-    before = _staged("ingest_feed")
-    out = run_sync_top(spark, state, max_pages=5, start_page=TOP_PAGES + 1)
-    assert _staged("ingest_feed") == before
+    with staged_keys("ingest_feed") as staged:
+        out = run_sync_top(spark, state, max_pages=5,
+                           start_page=TOP_PAGES + 1)
+    assert staged == []
     assert out == {"page": TOP_PAGES, "inserted": 0, "updated": 0}
     assert not os.path.exists(f"{state}/cursors/cursors.json")
 
@@ -95,9 +111,29 @@ def test_empty_batch_still_stops_an_over_reported_feed(
     with open(path, "rb") as f:
         assert f.read() == before
 
-    top_before = _staged("ingest_feed")
-    out = run_sync_top(spark, state, max_pages=5, start_page=TOP_PAGES + 1)
-    assert len(_staged("ingest_feed") - top_before) == 1
+    with staged_keys("ingest_feed") as staged:
+        out = run_sync_top(spark, state, max_pages=5,
+                           start_page=TOP_PAGES + 1)
+    assert len(staged) == 1
     assert out == {"page": TOP_PAGES, "inserted": 0, "updated": 0}
     with open(path, "rb") as f:
         assert f.read() == before
+
+
+def test_sync_calls_free_their_staged_feeds(spark, tmp_path, monkeypatch):
+    """A staged feed is used by its batch only: after a finished call
+    and one stopped by the empty-batch backstop, no cache entry,
+    scratch path or scratch dir of theirs is left."""
+    scratch = tmp_path / "scratch"
+    scratch.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(scratch))
+    before = (len(util._MAT_CACHE), len(util._SCRATCH))
+    state = str(tmp_path / "s")
+    with staged_keys("ingest_feed") as staged:
+        run_sync_top(spark, state, max_pages=1)
+        monkeypatch.setattr(ingest, "feed_total_pages",
+                            lambda *a, **kw: TOP_PAGES + 10)
+        run_sync_top(spark, state, max_pages=1, start_page=TOP_PAGES + 1)
+    assert len(staged) == 2
+    assert (len(util._MAT_CACHE), len(util._SCRATCH)) == before
+    assert os.listdir(scratch) == []

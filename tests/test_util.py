@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import atexit
+import os
 import threading
 
 import pytest
@@ -261,21 +263,30 @@ def test_release_dir_lock_only_removes_own_lock(tmp_path):
     util.release_dir_lock(lock2)
 
 
-def test_reset_hook_kinds_split_staged_from_model(monkeypatch):
-    """bench.py's warm reps drop staged intermediates but keep trained
-    model artifacts (the IVF codebook memo carries its own fingerprint
-    invalidation); a full reset still clears both."""
+def test_reset_calls_every_registered_hook(monkeypatch):
+    """One reset clears the staged intermediates and every registered
+    memo (the IVF codebook and audit-index memos included)."""
     calls: list[str] = []
     monkeypatch.setattr(util, "_RESET_HOOKS", [])
-    util.register_reset_hook(lambda: calls.append("staged"))
-    util.register_reset_hook(lambda: calls.append("model"), kind="model")
+    util.register_reset_hook(lambda: calls.append("a"))
+    util.register_reset_hook(lambda: calls.append("b"))
 
-    util.reset_materialization_cache(kinds=("staged",))
-    assert calls == ["staged"]
-
-    calls.clear()
     util.reset_materialization_cache()
-    assert sorted(calls) == ["model", "staged"]
+    assert calls == ["a", "b"]
 
-    with pytest.raises(ValueError, match="kind"):
-        util.register_reset_hook(lambda: None, kind="index")
+
+def test_release_frees_one_materialization(spark, monkeypatch):
+    """A released entry leaves no cache key, scratch path or dir behind,
+    and emptying the scratch list registers no further exit hook."""
+    monkeypatch.setattr(util, "_SCRATCH", [])
+    df = util.materialize_once(spark.range(3), ("rel_t",), "rel_t_")
+    path = util._SCRATCH[0]
+    assert df.count() == 3
+    util.release_materialization(spark, ("rel_t",))
+    assert not os.path.exists(path) and util._SCRATCH == []
+    assert not any("rel_t" in k for k in util._MAT_CACHE)
+    util.release_materialization(spark, ("rel_t",))     # no-op
+
+    monkeypatch.setattr(atexit, "register", lambda fn: pytest.fail(
+        "scratch_dir registered another exit hook"))
+    os.rmdir(util.scratch_dir("rel_t_"))

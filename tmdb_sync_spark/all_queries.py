@@ -18,9 +18,9 @@ def _optional(modname: str) -> None:
     """Import a query layer, tolerating ONLY genuinely absent external
     dependencies. A bare ``except ImportError`` here once swallowed any
     import-time failure inside the engine itself (review finding): a
-    renamed internal symbol would silently shrink the registry, bench.py
-    would then skip the vanished headline queries, and the suite total
-    would read as a massive speedup. Internal breakage must stay loud."""
+    renamed internal symbol would silently shrink the registry, and
+    every consumer of it would then skip the vanished queries without
+    an error. Internal breakage must stay loud."""
     import importlib
 
     try:

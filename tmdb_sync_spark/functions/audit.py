@@ -336,10 +336,10 @@ def verify_substring_spans(
 # frame over a DETERMINISTIC planted eval set. Lives in the LOCAL parity
 # window (the driver's 50-slot window is frozen to the r11-certified
 # set during the optimization rounds); verified at the identical oracle
-# bar in tests/test_oracle_parity.py and timed by bench's added
-# audit_verdicts row. The Spark side runs the REAL production path — staged persisted
-# indexes + contamination_audit — while the DuckDB oracle recomputes all
-# three lens pair rules declaratively from the same parquet tables
+# bar in tests/test_oracle_parity.py. The Spark side runs the REAL
+# production path — staged persisted indexes + contamination_audit —
+# while the DuckDB oracle recomputes all three lens pair rules
+# declaratively from the same parquet tables
 # (bands: dd_minhash_lsh's twin; winnow: wn_substring_overlap's twin;
 # cosine: dd_embedding_cosine's twin).
 
@@ -540,13 +540,11 @@ _AUDIT_VERDICTS_SQL = f"""
     ORDER BY ev.doc_id
 """
 
-# Build-once memo for the staged audit indexes (kind="model": a
-# production audit serves from MAINTAINED indexes — rebuilding per bench
-# rep would measure index construction, not the audit; the
-# file_fingerprint keys invalidate on a driver-side table regeneration).
+# Build-once memo for the staged audit indexes (the file_fingerprint
+# keys invalidate on a driver-side table regeneration).
 _AUDIT_STORE_MEMO: dict[tuple, str] = {}
 _AUDIT_STORE_LOCK = threading.Lock()
-register_reset_hook(_AUDIT_STORE_MEMO.clear, kind="model")
+register_reset_hook(_AUDIT_STORE_MEMO.clear)
 
 
 def _staged_audit_indexes(spark: SparkSession, sf_dir: str) -> str:

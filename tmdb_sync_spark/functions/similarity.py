@@ -137,10 +137,10 @@ def _quantized_from(emb: DataFrame) -> DataFrame:
 # quant/norm projection plus one vectorized numpy matmul per Arrow
 # batch — microseconds per row — so the old unconditional 32-way spread
 # of a small table scheduled near-empty tasks and near-empty Arrow
-# batches (the measured reason ann_ivf ran SLOWER at 32 cores than 8 in
-# BENCH_r12_c8). Partition count = ceil(footer_rows / this) capped at
-# the session parallelism: any at-scale corpus exceeds the cap, so the
-# 100 TB plan shape is untouched. Scoped to the per-row scorers
+# batches (the measured reason ann_ivf ran SLOWER at 32 cores than 8).
+# Partition count = ceil(footer_rows / this) capped at the session
+# parallelism: any at-scale corpus exceeds the cap, so the 100 TB plan
+# shape is untouched. Scoped to the per-row scorers
 # (_quantized, the sign-LSH top-k): the pair-dedup family's work grows
 # with pairs, so _dup_candidate_pairs keeps the full spread.
 EMB_ROWS_PER_TASK = 4096
@@ -627,13 +627,9 @@ IVF_TOP_K = 3
 # lives in the VALUE, not the key, so a rewrite REPLACES the entry
 # instead of accumulating one dead codebook per rewrite for the driver's
 # lifetime. The reset hook remains for callers that rewrite without
-# touching mtime granularity (same-ns rewrites) or want a hard flush —
-# registered as a MODEL hook: the codebook is a trained index artifact
-# (built once, served to many queries), so a staged-only reset (bench.py
-# between warm reps) keeps it, exactly as a production IVF deployment
-# would; the fingerprint in the value still invalidates on data change.
+# touching mtime granularity (same-ns rewrites) or want a hard flush.
 _CODEBOOK_MEMO: dict = {}
-register_reset_hook(_CODEBOOK_MEMO.clear, kind="model")
+register_reset_hook(_CODEBOOK_MEMO.clear)
 
 
 def _embeddings_fingerprint(sf_dir: str) -> tuple:

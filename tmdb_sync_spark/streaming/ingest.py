@@ -54,7 +54,7 @@ from tmdb_sync_spark.sources.http_client import (
 from tmdb_sync_spark.sources.queries import discover
 from tmdb_sync_spark.sources.tmdb_source import feed_total_pages
 from tmdb_sync_spark.streaming import state as st
-from tmdb_sync_spark.util import materialize_once
+from tmdb_sync_spark.util import materialize_once, release_materialization
 
 CURSOR_KEY = "top_vote_count_movie"   # app/sync_top.py:19
 # Enforced on every dead-letter write (DataFrame.to), so the table's
@@ -96,7 +96,8 @@ def _clear_batch_errors(errors_path: str, first: int, last: int) -> None:
 # application would serve the PREVIOUS run's feed snapshot from scratch
 # parquet instead of re-fetching — invisible with the deterministic
 # fixture, silently stale against a live API. itertools.count() is
-# atomic under the GIL, so concurrent runs each get a distinct token.
+# atomic under the GIL, so concurrent runs each get a distinct token
+# and a batch's release never deletes another run's feed.
 _RUN_SEQ = itertools.count()
 
 
@@ -296,10 +297,12 @@ def run_sync_top(
         # executes as independent scans — unstaged, every page would be
         # fetched twice per batch, doubling API calls and retry costs.
         # Scratch parquet, not cache(): the staging-table pattern the
-        # engine uses for every fanned-out intermediate (util.py).
+        # engine uses for every fanned-out intermediate (util.py),
+        # released when the batch ends.
+        feed_key = ("ingest_feed", run_token, state_dir, page, n)
         feed = materialize_once(
             discover(spark, mode="top", start_page=page, max_pages=n),
-            cache_key=("ingest_feed", run_token, state_dir, page, n),
+            cache_key=feed_key,
             prefix="ingest_feed_",
         )
         src = _build_source(feed).cache()
@@ -344,6 +347,7 @@ def run_sync_top(
             updated += upd
         finally:
             src.unpersist()
+            release_materialization(spark, feed_key)
         page = last_page
         # ST1: commit granularity = one micro-batch (reference: one page,
         # app/sync_top.py:267-273)
@@ -458,12 +462,13 @@ def run_sync_years(
             end_page = end_page if total is None else min(end_page, total)
         while page <= end_page and processed_total < limit:
             n = min(batch_pages, YEARS_MAX_PAGES - page + 1)
+            feed_key = ("years_feed", run_token, state_dir,
+                        content_type, year, page, n)
             feed = materialize_once(
                 discover(spark, mode="years", year=year,
                          content_type=content_type,
                          start_page=page, max_pages=n),
-                cache_key=("years_feed", run_token, state_dir,
-                           content_type, year, page, n),
+                cache_key=feed_key,
                 prefix="years_feed_",
             )
             src = _build_source(feed).cache()
@@ -502,6 +507,7 @@ def run_sync_years(
                 processed_total += ins + upd
             finally:
                 src.unpersist()
+                release_materialization(spark, feed_key)
             # per-year cursor commit: cumulative counters, like the
             # reference's _save_cursor(cur.inserted + inserted_year)
             st.write_cursor(spark, cursors_path, {
@@ -549,11 +555,11 @@ def run_sync_category(
 
     movies_path = f"{state_dir}/movies"
     run_token = next(_RUN_SEQ)
+    feed_key = ("cat_feed", run_token, state_dir, category, content_type)
     feed = materialize_once(
         discover_category(spark, category=category,
                           content_type=content_type, max_pages=1),
-        cache_key=("cat_feed", run_token, state_dir, category,
-                   content_type),
+        cache_key=feed_key,
         prefix="cat_feed_",
     )
     src = _build_source(feed).cache()
@@ -566,6 +572,7 @@ def run_sync_category(
         ins, upd = _merge_batch(spark, movies_path, ok, category=category)
     finally:
         src.unpersist()
+        release_materialization(spark, feed_key)
     return {
         "inserted_or_updated": n_results,
         "type": content_type,

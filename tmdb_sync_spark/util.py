@@ -10,9 +10,11 @@ import tempfile
 import threading
 import time
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 _SCRATCH: list[str] = []
+atexit.register(
+    lambda: [shutil.rmtree(p, ignore_errors=True) for p in _SCRATCH])
 
 
 class ConcurrentWriterError(RuntimeError):
@@ -322,10 +324,6 @@ def scratch_dir(prefix: str) -> str:
     long-lived session must not accumulate /tmp state.
     """
     d = tempfile.mkdtemp(prefix=prefix)
-    if not _SCRATCH:
-        atexit.register(
-            lambda: [shutil.rmtree(p, ignore_errors=True) for p in _SCRATCH]
-        )
     _SCRATCH.append(d)
     return d
 
@@ -484,42 +482,38 @@ def materialize_once(df: DataFrame, cache_key: tuple, prefix: str) -> DataFrame:
     return spark.read.parquet(entry.path)
 
 
+def release_materialization(spark: SparkSession, cache_key: tuple) -> None:
+    """Drop one ``materialize_once`` entry and delete its scratch dir —
+    for a single-use staging table (a sync batch's feed) that no later
+    call will hit, so a long-lived process does not keep one dir per
+    batch until exit. Frames read from it are dead afterwards."""
+    with _MAT_LOCK:
+        entry = _MAT_CACHE.pop(
+            (spark.sparkContext.applicationId, *cache_key), None)
+    if entry is not None and entry.path is not None:
+        shutil.rmtree(entry.path, ignore_errors=True)
+        _SCRATCH.remove(entry.path)
+
+
 # Extra caches to flush alongside _MAT_CACHE: any module-level memo of
 # table-derived driver-side state registers its clear() here so one reset
-# call covers the whole engine. Two kinds:
-# - "staged": per-query intermediates (scratch-parquet materializations,
-#   fixture caches) — recomputed by every steady-state execution, so an
-#   honest timed run must drop them between reps;
-# - "model": trained index artifacts (the IVF k-means codebook) that a
-#   production deployment builds once and serves many queries from, and
-#   whose memos carry their OWN content-fingerprint invalidation — a
-#   steady-state query does NOT rebuild these, so a warm bench rep that
-#   drops them measures index construction, not the query.
+# call covers the whole engine.
 _RESET_HOOKS: list = []
 
 
-def register_reset_hook(fn, kind: str = "staged") -> None:
-    if kind not in ("staged", "model"):
-        raise ValueError(f"unknown reset-hook kind: {kind!r}")
-    _RESET_HOOKS.append((kind, fn))
+def register_reset_hook(fn) -> None:
+    _RESET_HOOKS.append(fn)
 
 
-def reset_materialization_cache(kinds: tuple = ("staged", "model")) -> None:
-    """Forget (but don't delete) cached materializations — bench.py calls
-    this next to ``clearCache()`` so timed runs recompute staged
-    intermediates instead of reading the previous run's parquet, keeping
-    cold/warm timings honest (and callers rewriting a source table in
-    place call it to drop every table-derived driver-side memo). Dirs are
-    still removed at interpreter exit.
-
-    The default clears EVERYTHING (the safe choice for in-place table
-    rewrites, where even fingerprinted model memos could alias on
-    mtime-granularity rewrites); pass ``kinds=("staged",)`` to keep
-    trained-model memos, as bench.py does between warm reps."""
+def reset_materialization_cache() -> None:
+    """Forget (but don't delete) cached materializations and every
+    registered memo — callers rewriting a source table in place call it
+    to drop all table-derived driver-side state (fingerprinted memos
+    could still alias on mtime-granularity rewrites). Dirs are still
+    removed at interpreter exit."""
     _MAT_CACHE.clear()
-    for kind, fn in _RESET_HOOKS:
-        if kind in kinds:
-            fn()
+    for fn in _RESET_HOOKS:
+        fn()
 
 
 def newest_tree_mtime(path: str) -> float:
