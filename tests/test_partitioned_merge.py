@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import pytest
 
+import json
 import os
 import tempfile
 
@@ -921,34 +922,108 @@ def test_replayed_batch_clears_stale_dead_letters(spark):
     assert remaining == {7}
 
 
-def test_if_not_exists_write_refuses_to_clobber_committed_table(spark):
+def test_create_refuses_to_clobber_committed_table(spark):
     """The create-if-absent primitive (bootstrap race fix): a second
-    writer whose exists-check raced the first must NO-OP under the lock,
-    not overwrite a table that already committed — with the sync jobs'
-    data-bearing bootstrap, the loser overwrote the winner's
+    creator whose exists-check raced the first must NO-OP under the
+    lock, not overwrite a table that already committed — with the sync
+    jobs' data-bearing bootstrap, the loser overwrote the winner's
     already-MERGED rows (found by review)."""
-    import tempfile
+    from pyspark.sql.types import StructType
+
+    from tmdb_sync_spark.plans.partitioned import (
+        create_partitioned,
+        read_partitioned,
+    )
 
     d = tempfile.mkdtemp(prefix="ine_")
     target = f"{d}/t"
-    empty_a = spark.createDataFrame([], "k BIGINT, y INT, v DOUBLE")
-    assert write_partitioned(
-        empty_a, target, "y", manifest_key="k", if_not_exists=True
-    ) is True
+    schema = StructType.fromDDL("k BIGINT, y INT, v DOUBLE")
+    assert create_partitioned(target, schema, "y", key="k") is True
     merge_into_partitioned(
         spark, target,
-        spark.createDataFrame([(1, 2000, 1.0), (2, 2001, 2.0)],
-                              "k BIGINT, y INT, v DOUBLE"),
+        spark.createDataFrame([(1, 2000, 1.0), (2, 2001, 2.0)], schema),
         keys=["k"], partition_col="y",
     )
     # the racing loser arrives after the winner merged real rows
-    assert write_partitioned(
-        empty_a, target, "y", manifest_key="k", if_not_exists=True
-    ) is False
-    from tmdb_sync_spark.plans.partitioned import read_partitioned
-
+    assert create_partitioned(target, schema, "y", key="k") is False
     assert {(r["k"], r["y"]) for r in read_partitioned(spark, target)
             .collect()} == {(1, 2000), (2, 2001)}
+
+
+def _job_ids(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("key", ["k", None])
+def test_create_runs_no_job_and_publishes_the_empty_write_record(
+    spark, tmp_path, key
+):
+    """Creating a table is a catalog write: no Spark job runs, and the
+    record equals the one a full write of the same empty frame
+    publishes, so readers and merges cannot tell the two apart."""
+    from tmdb_sync_spark.plans.partitioned import (
+        SCHEMA_NAME,
+        create_partitioned,
+        read_partitioned,
+    )
+
+    empty = spark.createDataFrame(
+        [], "k BIGINT, y INT, tags ARRAY<STRING>, seen TIMESTAMP")
+    created, written = str(tmp_path / "created"), str(tmp_path / "written")
+    tag = f"create-{key}"
+    assert _job_ids(spark, tag, lambda: create_partitioned(
+        created, empty.schema, "y", key=key)) == []
+    # the same probe sees the write's jobs, so the empty list above is
+    # not an artifact of the job-group bookkeeping
+    assert _job_ids(spark, f"write-{key}", lambda: write_partitioned(
+        empty, written, "y", manifest_key=key)) != []
+
+    def record(path):
+        with open(os.path.join(path, SCHEMA_NAME)) as fh:
+            return json.load(fh)
+
+    assert record(created) == record(written)
+    assert sorted(os.listdir(created)) == [SCHEMA_NAME]
+    assert read_partitioned(spark, created).count() == 0
+
+
+def test_crash_before_the_create_publishes_leaves_no_table(
+    tmp_path, monkeypatch
+):
+    """A create that dies before its journal is published never
+    happened: table_exists stays False (a crashed publish's tmp file is
+    not a table), and the next create commits the table."""
+    from pyspark.sql.types import StructType
+
+    from tmdb_sync_spark.plans import partitioned as pt
+
+    target = str(tmp_path / "t")
+    schema = StructType.fromDDL("k BIGINT, y INT")
+    real = os.replace
+
+    def crash(src, dst):
+        if dst.endswith(pt.SWAP_JOURNAL_NAME):
+            raise OSError("crash before the journal rename")
+        return real(src, dst)
+
+    with monkeypatch.context() as m:
+        m.setattr(os, "replace", crash)
+        with pytest.raises(OSError, match="crash before"):
+            pt.create_partitioned(target, schema, "y", key="k")
+
+    assert any(".tmp." in e for e in os.listdir(target))
+    assert pt.table_exists(target) is False
+    assert pt.create_partitioned(target, schema, "y", key="k") is True
+    assert pt.table_exists(target) is True
+    assert pt._load_record(target) == pt._table_record(schema, "y", "k", {})
+    # recovery swept the crashed publish's tmp file; no lock is left
+    assert sorted(os.listdir(target)) == [pt.SCHEMA_NAME]
 
 
 def test_concurrent_first_ever_syncs_union_not_clobber(spark, tmp_path):

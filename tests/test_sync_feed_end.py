@@ -121,19 +121,36 @@ def test_empty_batch_still_stops_an_over_reported_feed(
 
 
 def test_sync_calls_free_their_staged_feeds(spark, tmp_path, monkeypatch):
-    """A staged feed is used by its batch only: after a finished call
-    and one stopped by the empty-batch backstop, no cache entry,
-    scratch path or scratch dir of theirs is left."""
+    """A staged feed is used by its batch only: after each job's
+    finished calls (top, years, category) and a top call stopped by the
+    empty-batch backstop, no cache entry, scratch path or scratch dir of
+    theirs is left."""
     scratch = tmp_path / "scratch"
     scratch.mkdir()
     monkeypatch.setattr(tempfile, "tempdir", str(scratch))
     before = (len(util._MAT_CACHE), len(util._SCRATCH))
     state = str(tmp_path / "s")
-    with staged_keys("ingest_feed") as staged:
+
+    def top():
         run_sync_top(spark, state, max_pages=1)
-        monkeypatch.setattr(ingest, "feed_total_pages",
-                            lambda *a, **kw: TOP_PAGES + 10)
-        run_sync_top(spark, state, max_pages=1, start_page=TOP_PAGES + 1)
-    assert len(staged) == 2
-    assert (len(util._MAT_CACHE), len(util._SCRATCH)) == before
-    assert os.listdir(scratch) == []
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(ingest, "feed_total_pages",
+                       lambda *a, **kw: TOP_PAGES + 10)
+            run_sync_top(spark, state, max_pages=1,
+                         start_page=TOP_PAGES + 1)
+
+    def years():
+        run_sync_years(spark, state, start_year=YEAR, content_type="tv",
+                       batch_pages=2)
+
+    def category():
+        ingest.run_sync_category(spark, state, category="top_rated")
+
+    for tag, job, n_feeds in (("ingest_feed", top, 2),
+                              ("years_feed", years, 2),
+                              ("cat_feed", category, 1)):
+        with staged_keys(tag) as staged:
+            job()
+        assert len(staged) == n_feeds, tag
+        assert (len(util._MAT_CACHE), len(util._SCRATCH)) == before, tag
+        assert os.listdir(scratch) == [], tag

@@ -290,3 +290,16 @@ def test_release_frees_one_materialization(spark, monkeypatch):
     monkeypatch.setattr(atexit, "register", lambda fn: pytest.fail(
         "scratch_dir registered another exit hook"))
     os.rmdir(util.scratch_dir("rel_t_"))
+
+
+def test_reset_frees_finished_materializations(spark, monkeypatch):
+    """A reset deletes each finished entry's scratch dir and drops its
+    scratch path, as a release does: a long-lived process that resets
+    after in-place table rewrites keeps no dir per staged query."""
+    monkeypatch.setattr(util, "_SCRATCH", [])
+    df = util.materialize_once(spark.range(3), ("reset_t",), "reset_t_")
+    path = util._SCRATCH[0]
+    assert df.count() == 3 and os.path.isdir(path)
+    util.reset_materialization_cache()
+    assert not os.path.exists(path) and util._SCRATCH == []
+    assert not any("reset_t" in k for k in util._MAT_CACHE)

@@ -93,9 +93,8 @@ def write_partitioned(
     df: DataFrame, path: str, partition_col: str,
     cluster_by: Sequence[str] = (),
     manifest_key: str | None = None,
-    if_not_exists: bool = False,
     lock_wait_s: float = 0.0,
-) -> bool:
+) -> None:
     """Full overwrite of a hive-partitioned table: plan → journal →
     apply, the commit path every writer shares (module docstring).
 
@@ -126,20 +125,12 @@ def write_partitioned(
     (Delta's _delta_log, Iceberg's metadata pointer), reduced to one
     file + deterministic replay. The table's ``_merge.lock`` is held
     throughout and the directory is never cleared, so overwrite and
-    merge are fully mutually exclusive.
-
-    ``if_not_exists``: re-check :func:`table_exists` UNDER the writer
-    lock and no-op (returning ``False``) when the table already
-    committed — the create-if-absent primitive for bootstrap races. Two
-    jobs that both saw "absent" outside the lock serialize here, and the
-    loser must NOT overwrite the winner's table (with the winner's
-    already-MERGED rows, in the sync jobs' case). Returns ``True`` when
-    this call wrote the table."""
+    merge are fully mutually exclusive."""
     lock = _acquire_merge_lock(path, wait_s=lock_wait_s)
     try:
-        return write_partitioned_locked(
+        write_partitioned_locked(
             df, path, partition_col, cluster_by=cluster_by,
-            manifest_key=manifest_key, if_not_exists=if_not_exists,
+            manifest_key=manifest_key,
         )
     finally:
         release_dir_lock(lock)
@@ -149,8 +140,7 @@ def write_partitioned_locked(
     df: DataFrame, path: str, partition_col: str,
     cluster_by: Sequence[str] = (),
     manifest_key: str | None = None,
-    if_not_exists: bool = False,
-) -> bool:
+) -> None:
     """:func:`write_partitioned`'s body for callers that ALREADY hold the
     table's ``_merge.lock`` (the index compactions, which must take their
     source snapshot under the same lock that excludes appends — a
@@ -161,8 +151,6 @@ def write_partitioned_locked(
     here would deadlock the legitimate holder — callers own acquisition
     and release."""
     _recover_leftovers(path)
-    if if_not_exists and table_exists(path):
-        return False
     staging = _staging_dir(path)
     # one file per partition dir (docstring of write_partitioned)
     df.hint("rebalance", partition_col).sortWithinPartitions(
@@ -190,7 +178,29 @@ def write_partitioned_locked(
         _table_record(df.schema, partition_col, manifest_key, parts),
     )
     df.sparkSession.catalog.refreshByPath(path)
-    return True
+
+
+def create_partitioned(
+    path: str, schema: StructType, partition_col: str,
+    key: str | None = None, lock_wait_s: float = 0.0,
+) -> bool:
+    """Create an EMPTY table by committing only its record (a catalog
+    write: no swap ops, no staging, no Spark job) through :func:`_commit`
+    — the record :func:`write_partitioned` publishes for an empty frame
+    of ``schema`` with ``manifest_key=key``. Existence is checked UNDER
+    the writer lock, so of two racing creators one commits and one
+    no-ops, never clobbering the winner's (possibly merged) table.
+    Returns ``True`` when this call created the table."""
+    lock = _acquire_merge_lock(path, wait_s=lock_wait_s)
+    try:
+        _recover_leftovers(path)
+        if table_exists(path):
+            return False
+        _commit(path, _staging_dir(path), [], _table_record(
+            schema, partition_col, key, {} if key else None))
+        return True
+    finally:
+        release_dir_lock(lock)
 
 # Characters Spark/Hive %-escape in partition dir names
 # (ExternalCatalogUtils.escapePathName): ASCII control chars plus the set

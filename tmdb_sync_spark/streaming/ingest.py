@@ -10,6 +10,8 @@ the cursor row commits (ST1) and failures append to the dead-letter table
 (ST4). Resume = start from ``cursor.page + 1`` (ST2); bounded backfill =
 ``max_pages`` / end-of-feed stop (ST3): no batch past the feed's
 ``total_pages``, probed on the driver; an empty batch is the backstop.
+The top and per-year jobs run one shared batch body (:func:`_sync_batch`)
+and differ only in the data they hand it and in their cursor commits.
 
 Failure injection is deterministic (id % 97 → 'http', id % 89 → 'other'),
 standing in for the reference's per-item error taxonomy
@@ -28,6 +30,7 @@ observed metrics of the merge's staging write, not per-row bookkeeping.
 
 from __future__ import annotations
 
+import contextlib
 import itertools
 import os
 from datetime import datetime, timezone
@@ -36,8 +39,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from tmdb_sync_spark.plans.partitioned import (
+# write_partitioned: unused, kept for perfbench/run.py, which patches it
+from tmdb_sync_spark.plans.partitioned import (  # noqa: F401
+    create_partitioned,
     merge_into_partitioned,
+    table_exists,
     write_partitioned,
 )
 from tmdb_sync_spark.sources.enrich import (
@@ -188,46 +194,31 @@ def _merge_batch(
             f"_merge_batch: sort_stamp {sort_stamp!r} not in "
             f"{tuple(SORT_STAMPS)}"
         )
+    no_bad = F.array().cast("array<string>")
     # table_exists, not isdir: the lock's makedirs leaves an
     # existing-but-empty dir after a pre-commit bootstrap crash,
     # and the merge route would then rebuild the table from the
     # SOURCE schema — silently dropping created_at
-    from tmdb_sync_spark.plans.partitioned import table_exists
-
-    no_bad = F.array().cast("array<string>")
     if not table_exists(movies_path):
-        # Bootstrap = commit the EMPTY table (full schema: source
-        # columns + the target-only created_at / incorrect_frames /
-        # backdrop_path), then fall through to the ordinary MERGE. The
-        # empty create re-checks existence UNDER the writer lock
-        # (if_not_exists), so two jobs racing a first-ever sync
-        # serialize into one winner and one no-op — the old
-        # data-bearing bootstrap write let the losing job OVERWRITE the
-        # winner's already-merged rows (found by review). The merge
-        # into the committed-empty table inserts THROUGH the persisted
-        # schema record (the empty-table degrade contract,
-        # tests/test_partitioned_merge.py::
-        # test_empty_table_merge_keeps_target_only_columns).
-        empty = (
-            ok.limit(0)
-            .withColumn("created_at", F.col("synced_at"))
-            .withColumn("incorrect_frames", no_bad)
-            .withColumn(
-                "backdrop_path",
-                pick_backdrop_expr(F.col("frames"), no_bad),
-            )
-        )
-        for c in SORT_STAMPS.values():
-            empty = empty.withColumn(c, F.lit(None).cast("timestamp"))
-        for c in ("category", "sort_by"):
-            empty = empty.withColumn(c, F.lit(None).cast("string"))
-        write_partitioned(
-            empty, movies_path, "year",
-            cluster_by=("id", "content_type"),
-            manifest_key="id",
-            if_not_exists=True,
-            lock_wait_s=MERGE_LOCK_WAIT_S,
-        )
+        # Bootstrap = create the EMPTY table (source columns + every
+        # target-only column), then fall through to the ordinary MERGE,
+        # which inserts THROUGH the persisted schema record. The create
+        # re-checks existence UNDER the writer lock, so of two jobs
+        # racing a first-ever sync the loser never overwrites the
+        # winner's already-merged rows.
+        schema = ok.select(
+            "*",
+            F.col("synced_at").alias("created_at"),
+            no_bad.alias("incorrect_frames"),
+            pick_backdrop_expr(F.col("frames"), no_bad)
+            .alias("backdrop_path"),
+            *[F.lit(None).cast("timestamp").alias(c)
+              for c in SORT_STAMPS.values()],
+            *[F.lit(None).cast("string").alias(c)
+              for c in ("category", "sort_by")],
+        ).schema
+        create_partitioned(movies_path, schema, "year", key="id",
+                           lock_wait_s=MERGE_LOCK_WAIT_S)
     # upsert.py:76-90: incorrect_frames is PRESERVED on update
     # (target-only column → the merge's default keeps t's), and
     # backdrop_path is recomputed from the fresh frames EXCLUDING those
@@ -268,6 +259,72 @@ def _merge_batch(
     return res["counts"].get("insert", 0), res["counts"].get("update", 0)
 
 
+@contextlib.contextmanager
+def _staged_source(spark: SparkSession, feed: DataFrame, feed_key: tuple):
+    """Yield ``feed`` staged once, enriched and cached; both are freed
+    when the block ends. Staged: :func:`_build_source` fans the feed
+    into two enrichment scans (details + frames), so unstaged every
+    page would be fetched twice. ``feed_key[0]`` tags the job
+    (``ingest_feed``, ``years_feed``, ``cat_feed``)."""
+    src = _build_source(materialize_once(
+        feed, cache_key=feed_key, prefix=f"{feed_key[0]}_")).cache()
+    try:
+        yield src
+    finally:
+        src.unpersist()
+        release_materialization(spark, feed_key)
+
+
+def _sync_batch(
+    spark: SparkSession, movies_path: str, feed: DataFrame,
+    feed_key: tuple, first_page: int, errors: tuple, **merge_kw,
+) -> tuple[int, int, int] | None:
+    """The one batch body of the cursor jobs (top and years): stage
+    ``feed`` (pages from ``first_page``), dead-letter its failing items,
+    MERGE the rest with ``_merge_batch(**merge_kw)``. Returns
+    ``(last_page, inserted, updated)``, or ``None`` for an empty batch
+    (ST3's backstop for a feed that shrank after the driver's probe);
+    the caller commits its cursor.
+
+    ``errors`` = ``(path, ddl, endpoint, scope)`` of the dead-letter
+    table; ``scope`` maps its partition columns above ``page`` to this
+    feed's values (a column the rows lack is written as the literal)."""
+    with _staged_source(spark, feed, feed_key) as src:
+        last_page = src.agg(F.max("page")).first()[0]
+        if last_page is None:
+            return None
+        path, ddl, endpoint, scope = errors
+        failed = F.col("id") % 97 == 0
+        skipped = F.col("id") % 89 == 0
+        # ST4: dead letters with the reference's error taxonomy,
+        # idempotent BY PAGE (dynamic partition overwrite), not a blind
+        # append: this write precedes the merge and the cursor commit,
+        # so a failed batch replays, and an append would double-count
+        # every failing id (the one-row-per-failure contract, ST4's
+        # oracle). The range clear drops the stale rows of replayed
+        # pages that no longer fail (_clear_batch_errors).
+        _clear_batch_errors(
+            os.path.join(path, *[f"{c}={v}" for c, v in scope.items()]),
+            first_page, int(last_page),
+        )
+        bad = src.where(failed | skipped).select(
+            F.col("id").alias("item_id"), "content_type",
+            F.when(failed, CATEGORY_HTTP).otherwise(CATEGORY_OTHER)
+             .alias("category"),
+            "page", F.lit(endpoint).alias("endpoint"),
+            F.current_timestamp().alias("ts"),
+        )
+        bad.withColumns({
+            c: F.lit(v) for c, v in scope.items() if c not in bad.columns
+        }).to(StructType.fromDDL(ddl)).write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).partitionBy(*scope, "page").parquet(path)
+
+        ok = src.where(~(failed | skipped)).drop("page")
+        ins, upd = _merge_batch(spark, movies_path, ok, **merge_kw)
+    return int(last_page), ins, upd
+
+
 def run_sync_top(
     spark: SparkSession,
     state_dir: str,
@@ -292,67 +349,26 @@ def run_sync_top(
     total = feed_total_pages("top", page)
     while processed < max_pages and (total is None or page <= total):
         n = min(batch_pages, max_pages - processed)
-        # Stage the discover feed ONCE per batch: _build_source fans it
-        # into two enrichment subtrees (details + frames) which Spark
-        # executes as independent scans — unstaged, every page would be
-        # fetched twice per batch, doubling API calls and retry costs.
-        # Scratch parquet, not cache(): the staging-table pattern the
-        # engine uses for every fanned-out intermediate (util.py),
-        # released when the batch ends.
-        feed_key = ("ingest_feed", run_token, state_dir, page, n)
-        feed = materialize_once(
+        # NO sort stamp: the top sync never puts _sort_by on the doc
+        # (app/sync_top.py:190-214), so its upserts stamp neither
+        # last_*_sync_at — only year runs do (a faithful reference
+        # quirk: the cursor is named for vote_count, the stamp isn't)
+        done = _sync_batch(
+            spark, movies_path,
             discover(spark, mode="top", start_page=page, max_pages=n),
-            cache_key=feed_key,
-            prefix="ingest_feed_",
+            ("ingest_feed", run_token, state_dir, page, n), page,
+            (errors_path, ERROR_SCHEMA, "/discover/movie", {}),
+            category="discover_top_votes",
         )
-        src = _build_source(feed).cache()
-        try:
-            last_page = src.agg(F.max("page")).first()[0]
-            if last_page is None:       # backstop: feed shrank (ST3)
-                break
-            failed = F.col("id") % 97 == 0
-            skipped = F.col("id") % 89 == 0
-            # ST4: dead-letter write with the reference's error taxonomy.
-            # Idempotent BY PAGE (dynamic partition overwrite), not a blind
-            # append: this write precedes the merge and the cursor commit,
-            # so a mid-batch failure replays the batch — an append would
-            # then double-count every failing id, breaking the append-only
-            # table's one-row-per-failure contract (and the ST4 oracle).
-            # Re-processing a page replaces exactly that page's rows; the
-            # production analog keys dead-letters by source offset. The
-            # range clear below covers the pages the overwrite can't: a
-            # replayed page with NO current failures must drop its stale
-            # rows too (_clear_batch_errors).
-            _clear_batch_errors(errors_path, page, int(last_page))
-            src.where(failed | skipped).select(
-                F.col("id").alias("item_id"), "content_type",
-                F.when(failed, CATEGORY_HTTP).otherwise(CATEGORY_OTHER)
-                 .alias("category"),
-                "page", F.lit("/discover/movie").alias("endpoint"),
-                F.current_timestamp().alias("ts"),
-            ).to(StructType.fromDDL(ERROR_SCHEMA)).write.mode(
-                "overwrite"
-            ).option("partitionOverwriteMode", "dynamic").partitionBy(
-                "page"
-            ).parquet(errors_path)
-
-            ok = src.where(~(failed | skipped)).drop("page")
-            # NO sort stamp: the top sync never puts _sort_by on the doc
-            # (app/sync_top.py:190-214), so its upserts stamp neither
-            # last_*_sync_at — only year runs do (a faithful reference
-            # quirk: the cursor is named for vote_count, the stamp isn't)
-            ins, upd = _merge_batch(spark, movies_path, ok,
-                                    category="discover_top_votes")
-            inserted += ins
-            updated += upd
-        finally:
-            src.unpersist()
-            release_materialization(spark, feed_key)
-        page = last_page
+        if done is None:
+            break
+        page, ins, upd = done
+        inserted += ins
+        updated += upd
         # ST1: commit granularity = one micro-batch (reference: one page,
         # app/sync_top.py:267-273)
         st.write_cursor(spark, cursors_path, {
-            "key": CURSOR_KEY, "page": int(page),
+            "key": CURSOR_KEY, "page": page,
             "inserted": inserted, "updated": updated, "ts": _now(),
         })
         page += 1
@@ -387,10 +403,10 @@ def run_sync_years(
     each year resumes independently — the sharding that works around the
     feed's 500-page cap.
 
-    Same set-oriented shape as :func:`run_sync_top` (staged feed →
-    batched enrichment → dead-letter → one MERGE per micro-batch via
-    :func:`_merge_batch`, which carries the frames/marks/created_at
-    contracts), with the years-specific pieces:
+    The same batch body as :func:`run_sync_top` (:func:`_sync_batch`:
+    staged feed → batched enrichment → dead-letter → one MERGE per
+    micro-batch via :func:`_merge_batch`, which carries the
+    frames/marks/created_at contracts), with the years-specific pieces:
 
     - cursor keys ``years:{content_type}:{year}``; counters ACCUMULATE
       into each year's cursor across runs (app/sync_years.py:260-267
@@ -462,61 +478,33 @@ def run_sync_years(
             end_page = end_page if total is None else min(end_page, total)
         while page <= end_page and processed_total < limit:
             n = min(batch_pages, YEARS_MAX_PAGES - page + 1)
-            feed_key = ("years_feed", run_token, state_dir,
-                        content_type, year, page, n)
-            feed = materialize_once(
+            done = _sync_batch(
+                spark, movies_path,
                 discover(spark, mode="years", year=year,
                          content_type=content_type,
                          start_page=page, max_pages=n),
-                cache_key=feed_key,
-                prefix="years_feed_",
+                ("years_feed", run_token, state_dir,
+                 content_type, year, page, n), page,
+                (errors_path, YEAR_ERROR_SCHEMA, endpoint,
+                 {"content_type": content_type, "year": year}),
+                sort_stamp=stamp, category=f"discover_year_{year}",
+                sort_by=sort_by,
             )
-            src = _build_source(feed).cache()
-            try:
-                last_page = src.agg(F.max("page")).first()[0]
-                if last_page is None:       # backstop: feed shrank (ST3)
-                    break
-                failed = F.col("id") % 97 == 0
-                skipped = F.col("id") % 89 == 0
-                _clear_batch_errors(
-                    os.path.join(errors_path,
-                                 f"content_type={content_type}",
-                                 f"year={year}"),
-                    page, int(last_page),
-                )
-                src.where(failed | skipped).select(
-                    F.col("id").alias("item_id"), "content_type",
-                    F.when(failed, CATEGORY_HTTP).otherwise(CATEGORY_OTHER)
-                     .alias("category"),
-                    "page", F.lit(endpoint).alias("endpoint"),
-                    F.current_timestamp().alias("ts"),
-                    F.lit(year).cast("int").alias("year"),
-                ).to(StructType.fromDDL(YEAR_ERROR_SCHEMA)).write.mode(
-                    "overwrite"
-                ).option("partitionOverwriteMode", "dynamic").partitionBy(
-                    "content_type", "year", "page"
-                ).parquet(errors_path)
-
-                ok = src.where(~(failed | skipped)).drop("page")
-                ins, upd = _merge_batch(
-                    spark, movies_path, ok, sort_stamp=stamp,
-                    category=f"discover_year_{year}", sort_by=sort_by,
-                )
-                year_ins += ins
-                year_upd += upd
-                processed_total += ins + upd
-            finally:
-                src.unpersist()
-                release_materialization(spark, feed_key)
+            if done is None:
+                break
+            last_page, ins, upd = done
+            year_ins += ins
+            year_upd += upd
+            processed_total += ins + upd
             # per-year cursor commit: cumulative counters, like the
             # reference's _save_cursor(cur.inserted + inserted_year)
             st.write_cursor(spark, cursors_path, {
-                "key": key, "page": int(last_page),
+                "key": key, "page": last_page,
                 "inserted": cur0["inserted"] + year_ins,
                 "updated": cur0["updated"] + year_upd,
                 "ts": _now(),
             })
-            page = int(last_page) + 1
+            page = last_page + 1
         inserted_total += year_ins
         updated_total += year_upd
         last_year = year
@@ -554,25 +542,17 @@ def run_sync_category(
     from tmdb_sync_spark.sources.queries import discover_category
 
     movies_path = f"{state_dir}/movies"
-    run_token = next(_RUN_SEQ)
-    feed_key = ("cat_feed", run_token, state_dir, category, content_type)
-    feed = materialize_once(
-        discover_category(spark, category=category,
-                          content_type=content_type, max_pages=1),
-        cache_key=feed_key,
-        prefix="cat_feed_",
-    )
-    src = _build_source(feed).cache()
-    try:
+    feed = discover_category(spark, category=category,
+                             content_type=content_type, max_pages=1)
+    feed_key = ("cat_feed", next(_RUN_SEQ), state_dir, category,
+                content_type)
+    with _staged_source(spark, feed, feed_key) as src:
         n_results = src.count()
         ok = src.where(F.col("n_valid_frames") > 0).drop("page")
         # the category upsert carries no _sort_by (app/sync.py:112-133,
         # upsert.py:70-72 reads a key that was never set) → no stamp;
         # _category is the category name itself (app/sync.py:123)
         ins, upd = _merge_batch(spark, movies_path, ok, category=category)
-    finally:
-        src.unpersist()
-        release_materialization(spark, feed_key)
     return {
         "inserted_or_updated": n_results,
         "type": content_type,

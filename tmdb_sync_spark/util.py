@@ -487,9 +487,13 @@ def release_materialization(spark: SparkSession, cache_key: tuple) -> None:
     for a single-use staging table (a sync batch's feed) that no later
     call will hit, so a long-lived process does not keep one dir per
     batch until exit. Frames read from it are dead afterwards."""
+    _release((spark.sparkContext.applicationId, *cache_key))
+
+
+def _release(key: tuple) -> None:
+    # an entry still being written has no path: its dir waits for exit
     with _MAT_LOCK:
-        entry = _MAT_CACHE.pop(
-            (spark.sparkContext.applicationId, *cache_key), None)
+        entry = _MAT_CACHE.pop(key, None)
     if entry is not None and entry.path is not None:
         shutil.rmtree(entry.path, ignore_errors=True)
         _SCRATCH.remove(entry.path)
@@ -506,12 +510,15 @@ def register_reset_hook(fn) -> None:
 
 
 def reset_materialization_cache() -> None:
-    """Forget (but don't delete) cached materializations and every
-    registered memo — callers rewriting a source table in place call it
-    to drop all table-derived driver-side state (fingerprinted memos
-    could still alias on mtime-granularity rewrites). Dirs are still
-    removed at interpreter exit."""
-    _MAT_CACHE.clear()
+    """Release every cached materialization (its scratch dir too) and
+    clear every registered memo — callers rewriting a source table in
+    place call it to drop all table-derived driver-side state
+    (fingerprinted memos could still alias on mtime-granularity
+    rewrites). Frames read from a released entry are dead afterwards."""
+    with _MAT_LOCK:
+        keys = list(_MAT_CACHE)
+    for key in keys:
+        _release(key)
     for fn in _RESET_HOOKS:
         fn()
 
