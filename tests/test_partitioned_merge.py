@@ -806,8 +806,7 @@ def test_empty_table_merge_keeps_target_only_columns(spark):
 def test_ingest_crash_then_resume_converges(spark):
     """End-to-end crash/resume over the LIVE ingest loop: kill the sync
     at an arbitrary filesystem step of its movies-table write (bootstrap
-    overwrite or batch merge — both commit through the swap journal),
-    then resume. The next run's entry recovery rolls any journaled write
+    create, a record-only commit, or batch merge), then resume. The next run's entry recovery rolls any journaled write
     forward and the cursor granularity replays at most one un-committed
     batch, so the final movies table and cursor must equal an uncrashed
     control run's exactly. Counters may legitimately reclassify replayed

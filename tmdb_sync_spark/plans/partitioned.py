@@ -93,7 +93,6 @@ def write_partitioned(
     df: DataFrame, path: str, partition_col: str,
     cluster_by: Sequence[str] = (),
     manifest_key: str | None = None,
-    lock_wait_s: float = 0.0,
 ) -> None:
     """Full overwrite of a hive-partitioned table: plan → journal →
     apply, the commit path every writer shares (module docstring).
@@ -126,7 +125,7 @@ def write_partitioned(
     file + deterministic replay. The table's ``_merge.lock`` is held
     throughout and the directory is never cleared, so overwrite and
     merge are fully mutually exclusive."""
-    lock = _acquire_merge_lock(path, wait_s=lock_wait_s)
+    lock = _acquire_merge_lock(path)
     try:
         write_partitioned_locked(
             df, path, partition_col, cluster_by=cluster_by,

@@ -43,6 +43,7 @@ from tmdb_sync_spark.plans.partitioned import (
     create_partitioned,
     merge_into_partitioned,
     read_partitioned,
+    table_exists,
 )
 from tmdb_sync_spark.registry import register_retired
 from tmdb_sync_spark.sources.files import parse_jsonl_lines
@@ -156,9 +157,10 @@ def ingest_file_stream(
     errors_path = os.path.join(state_dir, f"errors_{table_name}")
     ckpt = os.path.join(state_dir, f"_ckpt_{table_name}")
 
-    # a no-op once the table exists (checked under its writer lock)
-    create_partitioned(table_path, schema, partition_col, key=keys[0],
-                       lock_wait_s=MERGE_LOCK_WAIT_S)
+    if not table_exists(table_path):
+        # re-checked under the writer lock: a racing creator no-ops
+        create_partitioned(table_path, schema, partition_col, key=keys[0],
+                           lock_wait_s=MERGE_LOCK_WAIT_S)
 
     stats = {"batches": 0, "dead": 0, "near_dups": 0, "profile_replays": 0}
     row = F.struct(*[F.col(c) for c in schema.fieldNames()])

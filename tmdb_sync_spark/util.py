@@ -514,7 +514,10 @@ def reset_materialization_cache() -> None:
     clear every registered memo — callers rewriting a source table in
     place call it to drop all table-derived driver-side state
     (fingerprinted memos could still alias on mtime-granularity
-    rewrites). Frames read from a released entry are dead afterwards."""
+    rewrites). Frames read from a released entry are dead afterwards,
+    so a reset must not run while another thread still uses a
+    materialized frame (a ``materialize_once`` waiter, a sync batch
+    reading its staged feed)."""
     with _MAT_LOCK:
         keys = list(_MAT_CACHE)
     for key in keys:
